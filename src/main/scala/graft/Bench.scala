@@ -87,8 +87,8 @@ object Bench {
       // intermediate — the merge/IVM family's KB-scale deltas — stays
       // pinned at the session's shuffle parallelism and each consuming
       // stage fans out full-width tasks over near-empty cached partitions
-      // (ProfileJobs r18: 32-task stages per KB frame; the feed write
-      // emitted 32 files per commit). Enabling it lets the cache's own
+      // (round-18 per-job profile: 32-task stages per KB frame; the feed
+      // write emitted 32 files per commit). Enabling it lets the cache's own
       // final stage coalesce to advisoryPartitionSizeInBytes — 1 partition
       // at KB scale, advisory-sized pieces at 100 TB — adding NO shuffle
       // (the stage already exists; only its partition count changes).

@@ -315,49 +315,36 @@ final class ParquetTable(val path: String,
     name
   }
 
-  private def commitNew(df: DataFrame, expected: Option[Int],
-      changes: Option[DataFrame]): ParquetTable = {
-    // validate the declared feed's shape BEFORE any I/O (appendVersion's
-    // fail-in-milliseconds discipline); the baseline for the optional
-    // content verification is the pre-commit live version, read now
-    changes.foreach(validateFeedShape(df, _))
-    val (next, verifyBase) = ParquetTable.withCommitLock(path) {
+  /** The one commit pipeline: every commit kind — overwrite (plain,
+    * conditional, feed-carrying), link-union append, partition replace,
+    * restore and clone — runs these phases, each in one place:
+    *   1. under the commit lock: the optimistic stale check (when
+    *      `expected` is set), then [[reserveNextDir]];
+    *   2. outside the lock: `stage(next, base)` builds the reserved dir
+    *      (write, feed, census, links; `base` is the version live at
+    *      reservation) and returns what the log record carries;
+    *   3. under the lock again: the stale re-check, [[swapPointer]] and
+    *      [[logCommit]].
+    * Any failure deletes the staged dir: the pointer still names the old
+    * version, so this removes only our own staging.
+    */
+  private def commit(kind: String, expected: Option[Int])(
+      stage: (String, Int) => ParquetTable.Staged): ParquetTable = {
+    def checkStale(): Unit =
       expected.foreach(e => if (versionNum != e) throw stale(e, versionNum))
-      // the feed-verification baseline is resolved INSIDE the commit
-      // lock that reserves the version dir: read() pins the predecessor
-      // version's PATH eagerly here, so a concurrent commit landing
-      // after the lock releases cannot repoint the baseline and make
-      // verifyDeclaredFeed diff against the wrong predecessor.
-      // First write: a FRESH empty relation, never df.limit(0) — the
-      // latter shares df's plan leaf, and the verification's
-      // diff-vs-declared exceptAll over three frames off one leaf can
-      // trip Catalyst's attribute rebinding (seen with a
-      // dropDuplicates-derived df)
-      val vb: Option[DataFrame] =
-        if (changes.isDefined && feedVerifyEnabled(df))
-          Some(if (exists) read(df.sparkSession)
-            else df.sparkSession.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema))
-        else None
-      (reserveNextDir(), vb)
+    val (next, base) = ParquetTable.withCommitLock(path) {
+      checkStale()
+      (reserveNextDir(), versionNum)
     }
     try {
-      cprof("overwrite:write")(writeVersion(df, next))
-      changes.foreach(c => cprof("overwrite:feed")(writeFeed(next, c)))
-      verifyBase.foreach(verifyDeclaredFeed(_, df, changes.get))
-      // the version dir is complete — census it for the commit log
-      // OUTSIDE the lock (footer stats reads); an overwrite's adds ARE
-      // the full version, so the record doubles as a full file set
-      val (adds, feedFiles) = cprof("overwrite:census")(commitCensus(next))
-      cprof("overwrite:swap+log")(ParquetTable.withCommitLock(path) {
-        expected.foreach(e => if (versionNum != e) throw stale(e, versionNum))
+      val staged = stage(next, base)
+      ParquetTable.withCommitLock(path) {
+        checkStale()
         swapPointer(next)
-        logCommit(next, "overwrite", adds, feedFiles, Nil, renamed = false)
-      })
+        logCommit(next, kind, staged)
+      }
     } catch {
       case t: Throwable =>
-        // never leave a staged-but-uncommitted dir behind; the pointer
-        // still names the old version, so this deletes only our staging
         try FsUtil.deleteRecursively(Paths.get(path, next))
         catch { case _: Exception => () }
         throw t
@@ -365,19 +352,38 @@ final class ParquetTable(val path: String,
     this
   }
 
-  /** Driver-phase commit profiler (`-Dgraft.commit.profile=true`):
-    * the storage layer's job labels attribute executor time, but the
-    * commit protocol's census/link/log/swap work is driver-side and
-    * shows up only as inter-job gaps — this names it. Off by default.
-    */
-  private def cprof[A](label: String)(f: => A): A =
-    if (!java.lang.Boolean.getBoolean("graft.commit.profile")) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"[cprof] $label%-22s ${(System.nanoTime() - t0) / 1e9}%.3f s  ($path)")
-      r
+  private def commitNew(df: DataFrame, expected: Option[Int],
+      changes: Option[DataFrame]): ParquetTable = {
+    // validate the declared feed's shape BEFORE any I/O (appendVersion's
+    // fail-in-milliseconds discipline)
+    changes.foreach(validateFeedShape(df, _))
+    commit("overwrite", expected) { (next, base) =>
+      writeVersion(df, next)
+      changes.foreach { c =>
+        writeFeed(next, c)
+        if (feedVerifyEnabled(df))
+          verifyDeclaredFeed(feedBaseline(df, base), df, c)
+      }
+      // the version dir is complete — census it for the commit log
+      // OUTSIDE the lock (footer stats reads); an overwrite's adds ARE
+      // the full version, so the record doubles as a full file set
+      val (adds, feed) = commitCensus(next)
+      ParquetTable.Staged(adds, feed)
     }
+  }
+
+  /** The feed-verification baseline: version `base`, the one live when
+    * [[commit]] reserved the dir under its lock — a concurrent commit
+    * landing afterwards cannot repoint it. First write: a FRESH empty
+    * relation, never df.limit(0) — the latter shares df's plan leaf,
+    * and the verification's diff-vs-declared exceptAll over three frames
+    * off one leaf can trip Catalyst's attribute rebinding (seen with a
+    * dropDuplicates-derived df).
+    */
+  private def feedBaseline(df: DataFrame, base: Int): DataFrame =
+    if (base > 0) readVersion(df.sparkSession, base)
+    else df.sparkSession.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
 
   /** Census of a COMPLETE staged version dir for the commit log: data
     * files (with footer min/max stats — read here, at commit time, the
@@ -401,11 +407,8 @@ final class ParquetTable(val path: String,
       }
     } finally walk.close()
     val sorted = data.result().sortBy(_._2)
-    // `graft.log.stats=off` is a measurement override (ProfileCensus)
-    // for timing the footer pass in isolation on the SAME binary
-    val statsOn = captureStats && !sys.props.get("graft.log.stats").contains("off")
     val adds =
-      if (statsOn) VersionLog.collectStats(sorted)
+      if (captureStats) VersionLog.collectStats(sorted)
       else sorted.map { case (abs, rel) =>
         VersionLog.FileEntry(rel, Map.empty[String, VersionLog.ColStat],
           try Some(Files.size(abs)) catch { case _: Exception => None }) }
@@ -415,17 +418,16 @@ final class ParquetTable(val path: String,
   /** Write the commit's [[VersionLog]] record (+ periodic checkpoint).
     * Called right after a successful pointer swap, still under the
     * commit lock (serializes checkpoint construction); best-effort by
-    * the log's contract — a commit never fails on log IO.
+    * the log's contract — [[VersionLog.append]] swallows every failure,
+    * so a commit never fails on log IO.
     */
   private def logCommit(next: String, kind: String,
-      adds: Seq[VersionLog.FileEntry], feedFiles: Seq[String],
-      removedPrefixes: Seq[String], renamed: Boolean): Unit =
-    try VersionLog.append(path, VersionLog.Record(next.drop(2).toInt, kind,
-      adds, feedFiles, removedPrefixes, renamed,
+      staged: ParquetTable.Staged): Unit =
+    VersionLog.append(path, VersionLog.Record(next.drop(2).toInt, kind,
+      staged.adds, staged.feed, staged.removedPrefixes, staged.renamed,
       // partitioned append/replace link walks skip the base's root-level
       // flat-fallback parquet — the file-set resolution must too
       dropRootFlat = kind != "overwrite" && partitionColumns.nonEmpty))
-    catch { case _: Exception => () }
 
   private def feedVerifyEnabled(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("graft.cdf.verifyDeclaredChanges")
@@ -464,13 +466,7 @@ final class ParquetTable(val path: String,
     JobLabel(changes.sparkSession, s"graft:writeFeed $path/$next") {
       changes.write.mode("append").parquet(feedDir.toString)
     }
-    val walk = Files.walk(feedDir)
-    val hasData =
-      try walk.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-      finally walk.close()
-    if (!hasData)
-      changes.limit(0).coalesce(1).write.mode("append")
-        .parquet(feedDir.toString)
+    ensureReadable(feedDir, changes)
   }
 
   /** The spec-mode content check (see [[overwriteWithChanges]]): the
@@ -556,57 +552,43 @@ final class ParquetTable(val path: String,
     walk(df.queryExecution.analyzed)
   }
 
-  /** Evidence hook (optimization rounds): with
-    * `-Dgraft.write.explainDir=<dir>`, every versioned write appends
-    * its final frame's formatted physical plan to
-    * `<dir>/<table>__<kind>.txt` before executing — the write-side
-    * plans (rebalance, clustering) never appear in a query's RETURNED
-    * frame, so this is how plans/rNN before/after captures are made.
-    * Off (absent prop) in every measured path.
-    */
-  private def explainWrite(df: DataFrame, kind: String): Unit =
-    sys.props.get("graft.write.explainDir").foreach { d =>
-      try {
-        val name = Paths.get(path).getFileName.toString
-        val f = Paths.get(d, s"${name}__$kind.txt")
-        Files.createDirectories(f.getParent)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        Files.writeString(f, s"== $kind write of $path ==\n$plan\n",
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-      } catch { case _: Exception => () }
-    }
-
   private def writeVersion(df: DataFrame, next: String): Unit = {
-    // mode("append"), NOT "overwrite": the reserved dir is empty, so the
-    // two are equivalent for content — but overwrite DELETES the dir
-    // before recreating it, and in that window a concurrent writer's
-    // reserveNextDir would see the number as free and stage into the same
-    // dir (the exact collision reservation exists to prevent)
-    explainWrite(df, "version")
+    writeData(df, next, "graft:writeVersion")
+    ensureReadable(Paths.get(path, next), df)
+    // commit the schema as version metadata (see storedSchema)
+    Files.writeString(Paths.get(path, next, SchemaFile), df.schema.json)
+  }
+
+  /** Write `df` into the staged dir `next` as the job labeled `label`.
+    * mode("append"), NOT "overwrite": the reserved dir is empty, so the
+    * two are equivalent for content — but overwrite DELETES the dir
+    * before recreating it, and in that window a concurrent writer's
+    * reserveNextDir would see the number as free and stage into the same
+    * dir (the exact collision reservation exists to prevent).
+    */
+  private def writeData(df: DataFrame, next: String, label: String): Unit = {
     val w = df.write.mode("append")
-    JobLabel(df.sparkSession, s"graft:writeVersion $path/$next") {
+    JobLabel(df.sparkSession, s"$label $path/$next") {
       (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
        else w).parquet(s"$path/$next")
     }
-    // An EMPTY partitioned write leaves no parquet files at all (there are
-    // no partition values to create dirs for), which makes the version
-    // unreadable — schema inference has nothing to read. Detect via a free
-    // directory walk (no Spark job) and lay down a schema-only file by
-    // rewriting the empty frame unpartitioned. Empty tables are routine in
-    // the DLQ loop (a batch where every row is valid writes an empty DLQ).
-    if (partitionColumns.nonEmpty) {
-      val verDir = Paths.get(path, next)
-      val walk = Files.walk(verDir)
-      val hasData =
-        try walk.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-        finally walk.close()
-      if (!hasData)
-        df.limit(0).coalesce(1).write.mode("append").parquet(verDir.toString)
-    }
-    // commit the schema as version metadata (see storedSchema)
-    Files.writeString(Paths.get(path, next, SchemaFile), df.schema.json)
+  }
+
+  /** An EMPTY partitioned write leaves no parquet files at all (there
+    * are no partition values to create dirs for), which makes the dir
+    * unreadable — schema inference has nothing to read. Detect via a
+    * free directory walk (no Spark job) and lay down a schema-only file
+    * by rewriting the empty frame unpartitioned. Empty writes are routine
+    * in the DLQ loop (a batch where every row is valid writes an empty
+    * DLQ, and declares an empty feed).
+    */
+  private def ensureReadable(dir: java.nio.file.Path, df: DataFrame): Unit = {
+    val walk = Files.walk(dir)
+    val hasData =
+      try walk.anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
+      finally walk.close()
+    if (!hasData)
+      df.limit(0).coalesce(1).write.mode("append").parquet(dir.toString)
   }
 
   private def swapPointer(next: String): Unit = {
@@ -669,113 +651,20 @@ final class ParquetTable(val path: String,
       baseSchema.fields ++
         df.schema.fields.filterNot(f =>
           baseSchema.exists(b => sameName(b.name, f.name))))
-    val next = ParquetTable.withCommitLock(path) {
-      // fail a known-stale append BEFORE the delta write + link walk, not
-      // just at swap time — commitNew's fail-fast shape
-      if (versionNum != baseV) throw stale(baseV, versionNum)
-      reserveNextDir()
-    }
-    try {
-      // append mode: same no-delete rationale as writeVersion
-      val w = df.write.mode("append")
-      JobLabel(df.sparkSession, s"graft:appendWrite $path/$next") {
-        (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
-         else w).parquet(s"$path/$next")
-      }
+    // expected = baseV: the link-union is computed against baseV's
+    // files, so a concurrent commit in between would be silently
+    // dropped — the stale committer fails like overwriteIf, before the
+    // delta write + link walk and again at swap time
+    commit("append", Some(baseV)) { (next, _) =>
+      writeData(df, next, "graft:appendWrite")
       // census BEFORE the link walk: the dir holds exactly the delta's
       // files here, which is precisely the step delta the commit log
       // records (and the CDF fast path later serves without walking)
-      val (logAdds, _) = commitCensus(next)
-      var linkRenamed = false
-      val nextDir = Paths.get(path, next)
-      import scala.jdk.CollectionConverters._
-      val skippedFlat = Seq.newBuilder[java.nio.file.Path]
-      val walk = Files.walk(prevDir)
-      try walk.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          // skip job markers and Hadoop's hidden .crc checksum siblings: a
-          // checksum file must be named .<file>.crc to pair with its data
-          // file, so one that needed collision-renaming would be useless —
-          // and Hadoop skips verification when the .crc is simply absent.
-          // For PARTITIONED tables additionally skip root-level parquet:
-          // the only legitimate root parquet in a partitioned version is
-          // the empty-write schema-only fallback (writeVersion), and
-          // linking it next to the delta's col=value dirs would mix
-          // directory depths — Spark's partition discovery then refuses
-          // the whole version ("conflicting directory structures"). Its
-          // schema role is carried by _schema.json. Skipped files are
-          // verified empty AFTER the walk — see below.
-          val flatFallback = partitionColumns.nonEmpty &&
-            p.getParent == prevDir && n.endsWith(".parquet")
-          if (flatFallback && Files.isRegularFile(p)) skippedFlat += p
-          // never link the BASE version's write-side change feed: it
-          // describes THAT commit's delta, and riding into the new
-          // version would mislabel it as this commit's feed
-          val rel = prevDir.relativize(p)
-          val inFeed = rel.getNameCount > 1 &&
-            rel.getName(0).toString == ChangesDir
-          Files.isRegularFile(p) && n != "_SUCCESS" && !n.startsWith(".") &&
-            !flatFallback && !inFeed
-        }
-        .foreach { p =>
-          val rel = prevDir.relativize(p)
-          val target0 = nextDir.resolve(rel)
-          Files.createDirectories(target0.getParent)
-          // part-file names carry write UUIDs so collisions are
-          // theoretical, but a silent skip would drop data — disambiguate
-          val target =
-            if (Files.exists(target0)) {
-              linkRenamed = true // poisons log file-SET resolution only
-              target0.resolveSibling(s"linked_v$baseV" + "_" +
-                p.getFileName.toString)
-            } else target0
-          try Files.createLink(target, p)
-          catch {
-            case _: UnsupportedOperationException | _: FileSystemException =>
-              Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-          }
-        }
-      finally walk.close()
-      // The flat-fallback skip is only sound for the schema-only
-      // zero-row file writeVersion lays down. A table directory first
-      // written through an UNPARTITIONED handle and later reopened with
-      // partitionColumns has real data rows at root level — silently
-      // skipping those would DROP them from the new version. Verify the
-      // skipped files are empty (one tiny job on a rare path) and fail
-      // the partition-spec mismatch loudly instead of losing data.
-      val flat = skippedFlat.result()
-      if (flat.nonEmpty) {
-        val nonEmpty = !df.sparkSession.read
-          .parquet(flat.map(_.toString): _*).isEmpty
-        if (nonEmpty) throw new IllegalStateException(
-          s"appendVersion: base version of $path holds data rows in " +
-            s"root-level parquet (${flat.size} file(s)) but this handle " +
-            s"declares partitionColumns=${partitionColumns.mkString(",")}" +
-            " — the base was written unpartitioned; rewrite the table " +
-            "under the new partition spec instead of appending")
-      }
-      // The link walk hard-linked the BASE version's _schema.json;
-      // writing through that name would corrupt the shared inode (and
-      // the base version's history with it) — unlink first, then write
-      // the evolved schema (validated pre-I/O above) fresh.
-      Files.deleteIfExists(nextDir.resolve(SchemaFile))
-      Files.writeString(nextDir.resolve(SchemaFile), evolved.json)
-      ParquetTable.withCommitLock(path) {
-        // an append's delta was computed against baseV's lists — a
-        // concurrent commit in between would be silently dropped by the
-        // link-union, so fail the stale committer like overwriteIf
-        if (versionNum != baseV) throw stale(baseV, versionNum)
-        swapPointer(next)
-        logCommit(next, "append", logAdds, Nil, Nil, linkRenamed)
-      }
-    } catch {
-      case t: Throwable =>
-        try FsUtil.deleteRecursively(Paths.get(path, next))
-        catch { case _: Exception => () }
-        throw t
+      val (adds, _) = commitCensus(next)
+      val renamed = linkBase(prevDir, next, evolved, df.sparkSession,
+        "appendVersion")(_ => false)
+      ParquetTable.Staged(adds, renamed = renamed)
     }
-    this
   }
 
   /** Dynamic partition overwrite (Delta `replaceWhere` / Spark's
@@ -932,104 +821,116 @@ final class ParquetTable(val path: String,
         alsoReplace.map(renderParts).getOrElse(Set.empty)
     }
     val depth = partitionColumns.size
-    val next = ParquetTable.withCommitLock(path) {
-      if (versionNum != baseV) throw stale(baseV, versionNum)
-      reserveNextDir()
-    }
-    try {
-      val sized = sizedForWrite(df)
-      explainWrite(sized, "replace")
-      JobLabel(df.sparkSession, s"graft:replaceWrite $path/$next") {
-        sized.write.mode("append")
-          .partitionBy(partitionColumns: _*).parquet(s"$path/$next")
-      }
-      // the declared feed rides the staged version dir (commitNew's
-      // discipline: built before the pointer swap, deleted with the
-      // staging dir on failure)
-      changes.foreach(c => cprof("replace:feed")(writeFeed(next, c)))
+    commit("replace", Some(baseV)) { (next, _) =>
+      writeData(sizedForWrite(df), next, "graft:replaceWrite")
+      // the declared feed rides the staged version dir (built before the
+      // pointer swap, deleted with the staging dir on failure)
+      changes.foreach(writeFeed(next, _))
       // census BEFORE the link walk (appendVersion's rationale)
-      val (logAdds, feedFiles) = cprof("replace:census")(commitCensus(next))
-      var linkRenamed = false
-      val nextDir = Paths.get(path, next)
-      import scala.jdk.CollectionConverters._
-      val skippedFlat = Seq.newBuilder[java.nio.file.Path]
-      val walk = Files.walk(prevDir)
-      cprof("replace:links") {
-      try walk.iterator().asScala
-        .filter { p =>
-          val n = p.getFileName.toString
-          val rel = prevDir.relativize(p)
-          // skip: markers/checksums (appendVersion's rationale), any file
-          // under a REPLACED leaf-partition dir (full tuple prefix), and
-          // root-level parquet (the empty-write schema fallback — its
-          // role is _schema.json's; verified empty AFTER the walk, same
-          // data-loss guard as appendVersion's)
-          val inReplaced = rel.getNameCount > depth &&
-            replaced.contains(
-              (0 until depth).map(i => rel.getName(i).toString).toVector)
-          val flatFallback = p.getParent == prevDir && n.endsWith(".parquet")
-          if (flatFallback && Files.isRegularFile(p)) skippedFlat += p
-          // the base version's change feed stays with ITS commit
-          // (appendVersion's rationale)
-          val inFeed = rel.getNameCount > 1 &&
-            rel.getName(0).toString == ChangesDir
-          Files.isRegularFile(p) && n != "_SUCCESS" && !n.startsWith(".") &&
-            !inReplaced && !flatFallback && !inFeed
-        }
-        .foreach { p =>
-          val rel = prevDir.relativize(p)
-          val target0 = nextDir.resolve(rel)
-          Files.createDirectories(target0.getParent)
-          val target =
-            if (Files.exists(target0)) {
-              linkRenamed = true // poisons log file-SET resolution only
-              target0.resolveSibling(s"linked_v$baseV" + "_" +
-                p.getFileName.toString)
-            } else target0
-          try Files.createLink(target, p)
-          catch {
-            case _: UnsupportedOperationException | _: FileSystemException =>
-              Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-          }
-        }
-      finally walk.close()
+      val (adds, feed) = commitCensus(next)
+      // links skip every file under a REPLACED leaf-partition dir (full
+      // tuple prefix); the sidecar keeps the base schema — no evolution
+      // through this path
+      val renamed = linkBase(prevDir, next,
+          storedSchema(prevDir).getOrElse(df.schema), df.sparkSession,
+          "replacePartitions") { rel =>
+        rel.getNameCount > depth && replaced.contains(
+          (0 until depth).map(i => rel.getName(i).toString).toVector)
       }
-      // The flat skip is only sound for writeVersion's schema-only
-      // zero-row fallback file. A table first written through an
-      // UNPARTITIONED handle and later reopened with partitionColumns has
-      // real data rows at root level — silently dropping them from the
-      // new version is the appendVersion data-loss class. Verify empty,
-      // fail the partition-spec mismatch loudly (appendVersion's guard).
-      val flat = skippedFlat.result()
-      if (flat.nonEmpty) {
-        val nonEmpty = !df.sparkSession.read
-          .parquet(flat.map(_.toString): _*).isEmpty
-        if (nonEmpty) throw new IllegalStateException(
-          s"replacePartitions: base version of $path holds data rows in " +
-            s"root-level parquet (${flat.size} file(s)) but this handle " +
-            s"declares partitionColumns=${partitionColumns.mkString(",")}" +
-            " — the base was written unpartitioned; rewrite the table " +
-            "under the new partition spec instead of replacing partitions")
-      }
-      // replaced-only schema: partitions carry the SAME schema (no
-      // evolution through this path) — rewrite the sidecar fresh rather
-      // than keep the linked shared inode (appendVersion's rationale)
-      Files.deleteIfExists(nextDir.resolve(SchemaFile))
-      Files.writeString(nextDir.resolve(SchemaFile),
-        storedSchema(prevDir).getOrElse(df.schema).json)
-      ParquetTable.withCommitLock(path) {
-        if (versionNum != baseV) throw stale(baseV, versionNum)
-        swapPointer(next)
-        logCommit(next, "replace", logAdds, feedFiles,
-          replaced.toSeq.map(_.mkString("/")).sorted, linkRenamed)
-      }
-    } catch {
-      case t: Throwable =>
-        try FsUtil.deleteRecursively(Paths.get(path, next))
-        catch { case _: Exception => () }
-        throw t
+      ParquetTable.Staged(adds, feed,
+        replaced.toSeq.map(_.mkString("/")).sorted, renamed)
     }
-    this
+  }
+
+  /** The link half of a link-union commit ([[appendVersion]],
+    * [[replacePartitions]]): link the base version's files into the
+    * staged dir `next`, next to the delta's writes, except what
+    * `skip(rel)` rejects; then commit `schema` as the new version's
+    * sidecar. The base's `_schema.json` is never linked: writing through
+    * a linked name would corrupt the shared inode (and the base
+    * version's history with it).
+    *
+    * PARTITIONED tables also skip the base's root-level parquet: the only
+    * legitimate root parquet in a partitioned version is the empty-write
+    * schema-only fallback ([[writeVersion]]), and linking it next to the
+    * delta's col=value dirs would mix directory depths — Spark's
+    * partition discovery then refuses the whole version ("conflicting
+    * directory structures"). Its schema role is carried by
+    * `_schema.json`. That skip is only sound for the zero-row fallback
+    * file: a table first written through an UNPARTITIONED handle and
+    * later reopened with partitionColumns has real data rows at root
+    * level, and skipping those would DROP them from the new version. So
+    * the skipped files are verified empty (one tiny job on a rare path)
+    * and the partition-spec mismatch fails loudly instead of losing data.
+    * Returns whether a name collision forced a renamed link.
+    */
+  private def linkBase(base: java.nio.file.Path, next: String,
+      schema: org.apache.spark.sql.types.StructType, spark: SparkSession,
+      op: String)(skip: java.nio.file.Path => Boolean): Boolean = {
+    val nextDir = Paths.get(path, next)
+    val flat = Seq.newBuilder[java.nio.file.Path]
+    val renamed = linkFiles(base, nextDir) { rel =>
+      val rootFlat = partitionColumns.nonEmpty && rel.getNameCount == 1 &&
+        rel.toString.endsWith(".parquet")
+      if (rootFlat) flat += base.resolve(rel)
+      rootFlat || rel.toString == SchemaFile || skip(rel)
+    }
+    val skippedFlat = flat.result()
+    if (skippedFlat.nonEmpty &&
+        !spark.read.parquet(skippedFlat.map(_.toString): _*).isEmpty)
+      throw new IllegalStateException(
+        s"$op: base version of $path holds data rows in root-level parquet " +
+          s"(${skippedFlat.size} file(s)) but this handle declares " +
+          s"partitionColumns=${partitionColumns.mkString(",")} — the base " +
+          "was written unpartitioned; rewrite the table under the new " +
+          "partition spec instead")
+    Files.writeString(nextDir.resolve(SchemaFile), schema.json)
+    renamed
+  }
+
+  /** Hard-link every file of version dir `src` into `dst`, mirroring rel
+    * paths, except what `skip(rel)` rejects — and never job markers,
+    * Hadoop's hidden `.crc` checksum siblings (a checksum must be named
+    * `.<file>.crc` to pair with its data file, so a collision-renamed one
+    * would be useless, and Hadoop skips verification when it is simply
+    * absent), the staging/data-vacuumed markers, or `src`'s `_changes/`
+    * feed (it describes THAT commit's delta; riding into `dst` would
+    * mislabel it as this commit's feed). Falls back to copying where the
+    * filesystem refuses links. Part-file names carry write UUIDs so
+    * collisions are theoretical, but a silent skip would drop data: a
+    * colliding name links as `linked_v<src>_<name>` and the result is
+    * true, which poisons the log's file-SET resolution only.
+    */
+  private def linkFiles(src: java.nio.file.Path, dst: java.nio.file.Path)(
+      skip: java.nio.file.Path => Boolean): Boolean = {
+    import scala.jdk.CollectionConverters._
+    val srcV = src.getFileName.toString.drop(2).toInt
+    var renamed = false
+    val walk = Files.walk(src)
+    try walk.iterator().asScala.foreach { p =>
+      val n = p.getFileName.toString
+      val rel = src.relativize(p)
+      val inFeed = rel.getNameCount > 1 &&
+        rel.getName(0).toString == ChangesDir
+      if (Files.isRegularFile(p) && n != "_SUCCESS" && !n.startsWith(".") &&
+          n != StagingMarker && n != DataVacuumedMarker && !inFeed &&
+          !skip(rel)) {
+        val target0 = dst.resolve(rel)
+        Files.createDirectories(target0.getParent)
+        val target =
+          if (Files.exists(target0)) {
+            renamed = true
+            target0.resolveSibling(s"linked_v${srcV}_$n")
+          } else target0
+        try Files.createLink(target, p)
+        catch {
+          case _: UnsupportedOperationException | _: FileSystemException =>
+            Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
+        }
+      }
+    }
+    finally walk.close()
+    renamed
   }
 
   /** Live version number (1-based). */
@@ -1115,27 +1016,7 @@ final class ParquetTable(val path: String,
     require(!Files.exists(srcDir.resolve(DataVacuumedMarker)),
       s"restoreVersion: version $v of $path was data-vacuumed (feed " +
         "retained) — its snapshot is no longer restorable")
-    val next = ParquetTable.withCommitLock(path) {
-      if (versionNum != curV) throw stale(curV, versionNum)
-      reserveNextDir()
-    }
-    try {
-      linkSnapshot(srcDir, Paths.get(path, next))
-      val adds = VersionLog.resolveFiles(path, v).getOrElse {
-        val (census, _) = commitCensus(next); census
-      }
-      ParquetTable.withCommitLock(path) {
-        if (versionNum != curV) throw stale(curV, versionNum)
-        swapPointer(next)
-        logCommit(next, "overwrite", adds, Nil, Nil, renamed = false)
-      }
-    } catch {
-      case t: Throwable =>
-        try FsUtil.deleteRecursively(Paths.get(path, next))
-        catch { case _: Exception => () }
-        throw t
-    }
-    this
+    commit("overwrite", Some(curV))((next, _) => linkSnapshot(path, v, next))
   }
 
   /** Zero-copy CLONE (Delta `CREATE TABLE … CLONE src`): a NEW table at
@@ -1163,60 +1044,24 @@ final class ParquetTable(val path: String,
     val srcName = currentVersion.getOrElse(
       throw new IllegalStateException(s"cloneTo: table at $path does not exist"))
     val srcV = srcName.drop(2).toInt
-    val srcDir = Paths.get(path, srcName)
-    val next = ParquetTable.withCommitLock(destPath) {
-      require(!dest.exists, s"cloneTo: concurrent create at $destPath")
-      dest.reserveNextDir()
-    }
-    try {
-      linkSnapshot(srcDir, Paths.get(destPath, next))
-      val adds = VersionLog.resolveFiles(path, srcV).getOrElse {
-        val (census, _) = dest.commitCensus(next); census
-      }
-      ParquetTable.withCommitLock(destPath) {
-        dest.swapPointer(next)
-        dest.logCommit(next, "overwrite", adds, Nil, Nil, renamed = false)
-      }
-    } catch {
-      case t: Throwable =>
-        try FsUtil.deleteRecursively(Paths.get(destPath, next))
-        catch { case _: Exception => () }
-        throw t
-    }
-    dest
+    // expected 0: a concurrent create at destPath fails the clone
+    dest.commit("overwrite", Some(0))((next, _) =>
+      dest.linkSnapshot(path, srcV, next))
   }
 
-  /** Hard-link a complete version snapshot's files into a reserved dir,
-    * mirroring rel paths — data files and the `_schema.json` sidecar;
-    * NEVER the source's `_changes/` feed (it describes THAT commit's
-    * delta, not this one's), job markers, or checksum siblings. Falls
-    * back to copying where the filesystem refuses links. Shared by
-    * [[restoreVersion]] and [[cloneTo]].
+  /** Stage a snapshot commit ([[restoreVersion]], [[cloneTo]]): link
+    * every file of version `srcV` of the table at `srcPath` — data files
+    * and the `_schema.json` sidecar, rel paths mirrored — into this
+    * table's staged dir `next`. The record carries the source's per-file
+    * stats and sizes RESOLVED FROM ITS LOG when it can (zero footer
+    * re-opens); an unresolvable log degrades to the commit-time census.
     */
-  private def linkSnapshot(srcDir: java.nio.file.Path,
-      dstDir: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(srcDir)
-    try walk.iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        val rel = srcDir.relativize(p)
-        val inFeed = rel.getNameCount > 1 &&
-          rel.getName(0).toString == ChangesDir
-        Files.isRegularFile(p) && !inFeed && n != "_SUCCESS" &&
-          !n.startsWith(".") && n != StagingMarker &&
-          n != DataVacuumedMarker
-      }
-      .foreach { p =>
-        val target = dstDir.resolve(srcDir.relativize(p))
-        Files.createDirectories(target.getParent)
-        try Files.createLink(target, p)
-        catch {
-          case _: UnsupportedOperationException | _: FileSystemException =>
-            Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
-    finally walk.close()
+  private def linkSnapshot(srcPath: String, srcV: Int,
+      next: String): ParquetTable.Staged = {
+    val renamed = linkFiles(Paths.get(srcPath, f"v_$srcV%05d"),
+      Paths.get(path, next))(_ => false)
+    ParquetTable.Staged(VersionLog.resolveFiles(srcPath, srcV)
+      .getOrElse(commitCensus(next)._1), renamed = renamed)
   }
 
   /** DATA-SKIPPING read of the live version (Delta's file-stats design,
@@ -1917,6 +1762,11 @@ final class ParquetTable(val path: String,
 }
 
 object ParquetTable {
+
+  /** What a staged commit contributes to its [[VersionLog.Record]]. */
+  private[io] final case class Staged(adds: Seq[VersionLog.FileEntry],
+      feed: Seq[String] = Nil, removedPrefixes: Seq[String] = Nil,
+      renamed: Boolean = false)
 
   private val monitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

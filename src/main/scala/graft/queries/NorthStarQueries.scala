@@ -539,7 +539,7 @@ object NorthStarQueries {
   /** The q112 serving arm's IVFADC geometry (round-13: the memory-scale
     * deployment arm replaces the uncompressed IVF as the served index).
     * From the recorded (nlist, m, nprobe, rerank) sweep
-    * (`ProfileIvfPqSweep`, BASELINE.md round 13): m=16 4-bit
+    * (BASELINE.md round 13): m=16 4-bit
     * sub-codebooks on 64 dims (16-byte codes — a 16× scanned-payload
     * reduction vs float vectors) with an exact re-rank window of
     * k×32 recovers recall@10 0.725/0.875 at sf0.01/sf0.1 — BIT-equal to
@@ -2407,7 +2407,7 @@ object NorthStarQueries {
     // every advance's CDF is O(|changes|) feed reads instead of the
     // full-width two-snapshot diff (which BASELINE.md measured dominating
     // the v2 advance). The history and its declared closed-form feeds are
-    // single-sourced in [[GoldIncFixture]] (shared with ProfileGoldInc);
+    // single-sourced in [[GoldIncFixture]];
     // exactness is not taken on faith — the DuckDB oracle aggregates the
     // final silver independently, so a divergent feed breaks the gold
     // hash, and GoldIncrementalSpec replays this flow under
@@ -5680,9 +5680,9 @@ object NorthStarQueries {
 
 /** The q103/five-table-IVM silver history and its DECLARED write-side
   * change feeds, single-sourced so the oracle-pinned query
-  * ([[NorthStarQueries.q103GoldIncrementalCity]]) and the stage-budget
-  * profiler (`graft.tools.ProfileGoldInc`) can never drift onto
-  * different workloads: v1 misses every 7th order, v2 inserts them AND
+  * ([[NorthStarQueries.q103GoldIncrementalCity]]) and its stage-budget
+  * measurements (BASELINE.md) can never drift onto different
+  * workloads: v1 misses every 7th order, v2 inserts them AND
   * shifts every 5th delivery date AND renames every 6th city, v3
   * deletes every 11th order.
   */

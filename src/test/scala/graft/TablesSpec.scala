@@ -194,6 +194,57 @@ class TablesSpec extends AnyFunSuite {
     TestSpark.assertSameRows(t.read(spark), Seq(Seq(2, "b")))
   }
 
+  test("a failed stage leaves no trace for every commit kind: pointer, " +
+      "version, staged dirs, log records and rows stay as they were") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    import scala.jdk.CollectionConverters._
+    val boom = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("stage-boom"); x
+    }
+    def base = Seq((1L, "A", 10L), (2L, "B", 20L)).toDF("id", "status", "cents")
+    // the repartition keeps the optimizer from folding the UDF over the
+    // local relation at planning time: it raises in the write's tasks
+    def bad = Seq((3L, "A", 30L)).toDF("id", "status", "cents")
+      .repartition(1).withColumn("cents", boom(col("cents")))
+    def feed(d: DataFrame) = d.withColumn("_change_type", lit("insert"))
+    val kinds: Seq[(String, ParquetTable => Unit)] = Seq(
+      "overwrite" -> (_.overwrite(bad)),
+      "overwriteWithChanges" -> (t => t.overwriteWithChanges(bad, feed(bad))),
+      "appendVersion" -> (_.appendVersion(bad)),
+      "replacePartitions" -> (_.replacePartitions(bad)),
+      "replacePartitionsWithChangesCovering" -> (t =>
+        t.replacePartitionsWithChangesCovering(bad, feed(bad),
+          Array(org.apache.spark.sql.Row("A")))))
+    val dir = Files.createTempDirectory("graft_tbl_fail")
+    kinds.foreach { case (kind, run) =>
+      val t = new ParquetTable(s"$dir/$kind", partitionColumns = Seq("status"))
+      t.overwrite(base)
+      val root = java.nio.file.Paths.get(t.path)
+      def names(d: java.nio.file.Path) = {
+        val l = Files.list(d)
+        try l.iterator().asScala.map(_.getFileName.toString).toSet
+        finally l.close()
+      }
+      def records = names(root.resolve("_log"))
+        .filter(n => n.startsWith("r_") && n.endsWith(".txt"))
+      val pointer = Files.readString(root.resolve("_current"))
+      val (v, recs, rows) = (t.version, records, TestSpark.rows(t.read(spark)))
+      val e = intercept[Exception](run(t))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(x => String.valueOf(x.getMessage))
+      assert(msgs.exists(_.contains("stage-boom")),
+        s"$kind must fail in its write stage, got $e")
+      assert(Files.readString(root.resolve("_current")) == pointer, kind)
+      assert(t.version == v, kind)
+      val above = names(root).filter(n =>
+        n.startsWith("v_") && n.drop(2).toInt > v)
+      assert(above.isEmpty, s"$kind left staged dir(s) $above")
+      assert(records == recs, s"$kind wrote a log record")
+      assert(TestSpark.rows(t.read(spark)) == rows, kind)
+    }
+  }
+
   test("compact collapses small files and preserves content") {
     val dir = Files.createTempDirectory("graft_tbl").toString
     val t = new ParquetTable(s"$dir/t5")

@@ -276,7 +276,7 @@ class VersionLogSpec extends AnyFunSuite {
         "applying the hybrid span delta to the FROM snapshot must " +
           "reproduce the TO snapshot exactly (multiset semantics)")
 
-      // hybrid ≡ walk: rename _log away (the ProfileLog methodology) so
+      // hybrid ≡ walk: rename _log away (the unlogged-table baseline) so
       // every step classifies through the walk paths, and compare
       val logDir = Paths.get(p, "_log")
       val off = Paths.get(p, "_log_off")
