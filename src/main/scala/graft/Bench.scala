@@ -50,7 +50,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HarnessCpus()
     // Pre-flight steal probe BEFORE any Spark work: a host that is already
     // under contention will contaminate every pass, and sampling it while
     // idle is the only window where steal is unambiguously not ours.

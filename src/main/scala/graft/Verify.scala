@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = HarnessCpus()
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .master(s"local[$cpus]")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.{ParquetTable, Sidecar}
-import graft.pipeline.Warehouse
+import graft.io.{JobLabel, ParquetTable, Sidecar}
+import graft.pipeline.{IndependentSteps, Warehouse}
 
 /** Incremental (CDF-driven) maintenance of the FIVE real reference gold
   * tables — the production wiring of [[GoldMaintenance]]'s loop (which
@@ -165,131 +165,116 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
       derive: (Map[String, DataFrame], Option[DataFrame]) => DataFrame,
       affected: (Map[String, DataFrame], Map[String, DataFrame],
         Map[String, DataFrame]) => DataFrame,
-      distincts: Seq[DistinctMeasure] = Nil): ParquetTable = {
-    val gold = warehouse.gold(goldName)
-    val newVs = sources.map { case (n, t) => n -> t.version }.toMap
-    val newF = sources.map { case (n, t) => n -> t.read(spark) }.toMap
-    // distinct estimates are derived columns too: recomputed from the
-    // maintained sketch after every fold, NULL sketch (all-NULL or
-    // empty group) reading as 0 identically on both paths
-    def withDerived(df: DataFrame): DataFrame =
-      (derived ++ distincts.map(d => d.name ->
-        coalesce(hll_sketch_estimate(col(d.sketchCol)), lit(0L))))
-        .foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-    // a sidecar whose key set differs from the current source list (a
-    // table gained or lost a source since the marker was written) reads
-    // as "no marker" — the documented full-rebuild fallback — instead of
-    // a NoSuchElementException bricking every subsequent advance
-    val applied = (if (gold.exists) appliedVersions(gold) else None)
-      .filter(_.keySet == sources.map(_._1).toSet)
-    applied match {
-      case Some(vs) if vs == newVs => () // already current — replay no-op
-      case Some(vs) =>
-        val oldF = sources.map { case (n, t) =>
-          n -> t.readVersion(spark, vs(n))
-        }.toMap
-        val cdfs = sources.collect { case (n, t) if vs(n) != newVs(n) =>
-          n -> t.changesBetween(spark, vs(n), newVs(n))
-        }.toMap
-        // the anchor set is changes-sized and feeds BOTH derive sides'
-        // semi-joins — without a persist its whole subtree (the CDF's
-        // full-width diff plus any reverse-lookup semi-joins) executes
-        // twice inside the one fold job; released before returning
-        // scratch-profiling seam (graft.gold.profile=true): forces each
-        // fold phase separately so wall/job attribution is readable;
-        // OFF in production — the phases then fuse into two jobs
-        val profiling = java.lang.Boolean.getBoolean("graft.gold.profile") ||
-          sys.env.get("GRAFT_GOLD_PROFILE").contains("true")
-        def prof[A](label: String)(f: => A): A =
-          if (!profiling) f else {
-            val t0 = System.nanoTime(); val r = f
-            println(f"[gprof] $label%-18s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            r
+      distincts: Seq[DistinctMeasure] = Nil): ParquetTable =
+    JobLabel(spark, s"graft:gold $goldName") {
+      val gold = warehouse.gold(goldName)
+      val newVs = sources.map { case (n, t) => n -> t.version }.toMap
+      val newF = sources.map { case (n, t) => n -> t.read(spark) }.toMap
+      // distinct estimates are derived columns too: recomputed from the
+      // maintained sketch after every fold, NULL sketch (all-NULL or
+      // empty group) reading as 0 identically on both paths
+      def withDerived(df: DataFrame): DataFrame =
+        (derived ++ distincts.map(d => d.name ->
+          coalesce(hll_sketch_estimate(col(d.sketchCol)), lit(0L))))
+          .foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
+      // a sidecar whose key set differs from the current source list (a
+      // table gained or lost a source since the marker was written) reads
+      // as "no marker" — the documented full-rebuild fallback — instead of
+      // a NoSuchElementException bricking every subsequent advance
+      val applied = (if (gold.exists) appliedVersions(gold) else None)
+        .filter(_.keySet == sources.map(_._1).toSet)
+      applied match {
+        case Some(vs) if vs == newVs => () // already current — replay no-op
+        case Some(vs) =>
+          val oldF = sources.map { case (n, t) =>
+            n -> t.readVersion(spark, vs(n))
+          }.toMap
+          val cdfs = sources.collect { case (n, t) if vs(n) != newVs(n) =>
+            n -> t.changesBetween(spark, vs(n), newVs(n))
+          }.toMap
+          // the anchor set is changes-sized and feeds BOTH derive sides'
+          // semi-joins — without a persist its whole subtree (the CDF's
+          // full-width diff plus any reverse-lookup semi-joins) executes
+          // twice inside the one fold job; released before returning
+          val affRaw = affected(cdfs, oldF, newF).toDF("__anchor").distinct()
+            .persist()
+          // the anchor set is changes-sized; the restricted derivations
+          // probe the CORPUS-sized silver frames with it, so past any real
+          // scale the semi-joins must be broadcast (the corpus side then
+          // never shuffles). The count is free (it materializes the
+          // persist the phases below need anyway) and bounds the hint: a
+          // mass-change advance whose anchor set outgrows the bound falls
+          // back to the shuffled semi-join instead of an OOM broadcast.
+          val aff =
+            if (affRaw.count() <= maxBroadcastAnchors) broadcast(affRaw)
+            else affRaw
+          // with distinct measures the two restricted derivations feed the
+          // signed delta AND the sketch fold's pair-loss/new-side subtrees
+          // (up to 3 evaluations each) — persist them for that case; the
+          // additive-only path uses each side once
+          val oldJ0 = derive(oldF, Some(aff))
+          val newJ0 = derive(newF, Some(aff))
+          val (oldJ, newJ) =
+            if (distincts.isEmpty) (oldJ0, newJ0)
+            else (oldJ0.persist(), newJ0.persist())
+          // signed union → one grouped delta (old contributions −, new +).
+          // Distinct measures FUSE their new-side sketch into this same
+          // aggregation (hll_sketch_agg skips the old side's NULLed
+          // values): the former separate newJ.groupBy sketch pass cost one
+          // more exchange plus one more gold-keyed join per advance for an
+          // aggregation over exactly the rows this one already shuffles.
+          val sign = col("__sign")
+          def signedSide(j: DataFrame, s: Long) = j.select(
+            keys.map(col) ++ measures.map(m => m.of.as(m.name)) ++
+              distincts.map(d => col(d.src).as(s"__src_${d.name}")) :+
+              lit(s).as("__sign"): _*)
+          val signed = signedSide(oldJ, -1L).unionByName(signedSide(newJ, 1L))
+          val delta = signed.groupBy(keys.map(col): _*)
+            .agg(sum(col(measures.head.name) * sign).as(s"__d_${measures.head.name}"),
+              measures.tail.map(m =>
+                sum(col(m.name) * sign).as(s"__d_${m.name}")) ++
+              distincts.map(d => hll_sketch_agg(
+                when(sign === 1L, col(s"__src_${d.name}")))
+                .as(s"__ns_${d.name}")): _*)
+          val renamed = keys.foldLeft(delta)((d, k) =>
+            d.withColumnRenamed(k, s"__k_$k"))
+          // null-safe key merge: groupBy collates NULL keys (the left-join
+          // grains legitimately produce them), so the fold must too
+          val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
+          // stored sketches ride through the additive merge untouched;
+          // their fold happens below (they cannot subtract)
+          val folded0 = gold.read(spark)
+            .select(keys.map(col) ++ measures.map(m => col(m.name)) ++
+              distincts.map(d => col(d.sketchCol)): _*)
+            .join(renamed, cond, "full_outer")
+            .select((keys.map(k => coalesce(col(k), col(s"__k_$k")).as(k)) ++
+              measures.map(m => (coalesce(col(m.name), lit(0L)) +
+                coalesce(col(s"__d_${m.name}"), lit(0L))).as(m.name)) ++
+              distincts.map(d => col(d.sketchCol)) ++
+              // the fused new-side sketches ride the same join into the
+              // sketch fold (NULL for groups the delta never touched)
+              distincts.map(d => col(s"__ns_${d.name}"))): _*)
+            .filter(col(rowMeasure) > 0)
+          val (folded, cleanup) =
+            if (distincts.isEmpty) (folded0, () => ())
+            else foldSketches(folded0, oldJ, newJ, keys, distincts,
+              () => derive(newF, None))
+          try gold.overwrite(GoldMaintenance.goldSized(withDerived(folded)))
+          finally {
+            affRaw.unpersist()
+            if (distincts.nonEmpty) { oldJ.unpersist(); newJ.unpersist() }
+            cleanup()
+            ()
           }
-        val affRaw = affected(cdfs, oldF, newF).toDF("__anchor").distinct()
-          .persist()
-        // the anchor set is changes-sized; the restricted derivations
-        // probe the CORPUS-sized silver frames with it, so past any real
-        // scale the semi-joins must be broadcast (the corpus side then
-        // never shuffles). The count is free (it materializes the
-        // persist the phases below need anyway) and bounds the hint: a
-        // mass-change advance whose anchor set outgrows the bound falls
-        // back to the shuffled semi-join instead of an OOM broadcast.
-        val aff = prof("aff") {
-          if (affRaw.count() <= maxBroadcastAnchors) broadcast(affRaw)
-          else affRaw
-        }
-        // with distinct measures the two restricted derivations feed the
-        // signed delta AND the sketch fold's pair-loss/new-side subtrees
-        // (up to 3 evaluations each) — persist them for that case; the
-        // additive-only path uses each side once
-        val oldJ0 = derive(oldF, Some(aff))
-        val newJ0 = derive(newF, Some(aff))
-        val (oldJ, newJ) =
-          if (distincts.isEmpty) (oldJ0, newJ0)
-          else (oldJ0.persist(), newJ0.persist())
-        prof("oldJ/newJ")(if (profiling && distincts.nonEmpty) {
-          oldJ.count(); newJ.count(); ()
-        } else ())
-        // signed union → one grouped delta (old contributions −, new +).
-        // Distinct measures FUSE their new-side sketch into this same
-        // aggregation (hll_sketch_agg skips the old side's NULLed
-        // values): the former separate newJ.groupBy sketch pass cost one
-        // more exchange plus one more gold-keyed join per advance for an
-        // aggregation over exactly the rows this one already shuffles.
-        val sign = col("__sign")
-        def signedSide(j: DataFrame, s: Long) = j.select(
-          keys.map(col) ++ measures.map(m => m.of.as(m.name)) ++
-            distincts.map(d => col(d.src).as(s"__src_${d.name}")) :+
-            lit(s).as("__sign"): _*)
-        val signed = signedSide(oldJ, -1L).unionByName(signedSide(newJ, 1L))
-        val delta = signed.groupBy(keys.map(col): _*)
-          .agg(sum(col(measures.head.name) * sign).as(s"__d_${measures.head.name}"),
-            measures.tail.map(m =>
-              sum(col(m.name) * sign).as(s"__d_${m.name}")) ++
-            distincts.map(d => hll_sketch_agg(
-              when(sign === 1L, col(s"__src_${d.name}")))
-              .as(s"__ns_${d.name}")): _*)
-        val renamed = keys.foldLeft(delta)((d, k) =>
-          d.withColumnRenamed(k, s"__k_$k"))
-        // null-safe key merge: groupBy collates NULL keys (the left-join
-        // grains legitimately produce them), so the fold must too
-        val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
-        // stored sketches ride through the additive merge untouched;
-        // their fold happens below (they cannot subtract)
-        val folded0 = gold.read(spark)
-          .select(keys.map(col) ++ measures.map(m => col(m.name)) ++
-            distincts.map(d => col(d.sketchCol)): _*)
-          .join(renamed, cond, "full_outer")
-          .select((keys.map(k => coalesce(col(k), col(s"__k_$k")).as(k)) ++
-            measures.map(m => (coalesce(col(m.name), lit(0L)) +
-              coalesce(col(s"__d_${m.name}"), lit(0L))).as(m.name)) ++
-            distincts.map(d => col(d.sketchCol)) ++
-            // the fused new-side sketches ride the same join into the
-            // sketch fold (NULL for groups the delta never touched)
-            distincts.map(d => col(s"__ns_${d.name}"))): _*)
-          .filter(col(rowMeasure) > 0)
-        val (folded, cleanup) =
-          if (distincts.isEmpty) (folded0, () => ())
-          else prof("foldSketches")(foldSketches(folded0, oldJ, newJ, keys,
-            distincts, () => derive(newF, None)))
-        try prof("overwrite")(gold.overwrite(
-          GoldMaintenance.goldSized(withDerived(folded))))
-        finally {
-          affRaw.unpersist()
-          if (distincts.nonEmpty) { oldJ.unpersist(); newJ.unpersist() }
-          cleanup()
-          ()
-        }
-      case None =>
-        // first build (or crash-window fallback): the one full pass
-        gold.overwrite(GoldMaintenance.goldSized(withDerived(
-          aggAll(derive(newF, None), keys, measures, distincts))))
+        case None =>
+          // first build (or crash-window fallback): the one full pass
+          gold.overwrite(GoldMaintenance.goldSized(withDerived(
+            aggAll(derive(newF, None), keys, measures, distincts))))
+      }
+      Sidecar.write(java.nio.file.Paths.get(gold.currentPath), Marker,
+        sources.map { case (n, _) => s"$n=${newVs(n)}" })
+      gold
     }
-    Sidecar.write(java.nio.file.Paths.get(gold.currentPath), Marker,
-      sources.map { case (n, _) => s"$n=${newVs(n)}" })
-    gold
-  }
 
   /** The distinct-measure fold (see [[DistinctMeasure]]): groups that
     * lost a (group, value) pair rescan from the full re-derived J
@@ -563,11 +548,14 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
     },
     distincts = Seq(DistinctMeasure("distinct_customers", "customer_id")))
 
-  /** Advance all five gold tables to the silver tables' live versions. */
-  def advanceAll(): Unit = {
-    customerBreakdown(); customerStatusByCity(); ordersByCustomerWeek()
-    ordersByCityYearMonth(); ordersTypeDeliveryTime()
-  }
+  /** Advance all five gold tables to the silver tables' live versions,
+    * all at once: each table reads only silver and commits only its own
+    * table and marker.
+    */
+  def advanceAll(): Unit = IndependentSteps.run(spark)(
+    () => customerBreakdown(), () => customerStatusByCity(),
+    () => ordersByCustomerWeek(), () => ordersByCityYearMonth(),
+    () => ordersTypeDeliveryTime())
 }
 
 /** The silver-frame renames shared by the batch builds and the

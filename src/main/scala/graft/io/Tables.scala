@@ -512,7 +512,8 @@ final class ParquetTable(val path: String,
     * so a blanket rebalance added a payload shuffle with no file-count
     * win — measured as a pure regression (q120/q121 +0.2–0.5 s and 3
     * MiB of new shuffle volume each) before being scoped back to the
-    * replace path. Skipped when the caller declared a layout
+    * replace path (a partitioned one still gets one writer per leaf from
+    * [[byLeaf]]). Skipped when the caller declared a layout
     * ([[hasExplicitLayout]]), when AQE is off (a REBALANCE without AQE
     * is just an unconditional extra shuffle), and under
     * `graft.write.rebalance=off`.
@@ -552,6 +553,26 @@ final class ParquetTable(val path: String,
     walk(df.queryExecution.analyzed)
   }
 
+  /** One writer task per partition leaf (Iceberg's default
+    * `write.distribution-mode=hash`): hash a partitioned write by its
+    * partition columns over `spark.sql.shuffle.partitions` tasks, so each
+    * leaf gets one file and the leaves spread over every core. Without
+    * it AQE coalesces a small frame's last shuffle into ONE task, which
+    * then writes every leaf in turn; a shuffle with an explicit count is
+    * one AQE does not coalesce. A frame that declared its layout
+    * ([[hasExplicitLayout]]) keeps it; that includes the replace path's
+    * [[sizedForWrite]] REBALANCE, which also splits a hot leaf over
+    * several tasks, as a hash by leaf cannot.
+    */
+  private def byLeaf(df: DataFrame): DataFrame =
+    if (partitionColumns.isEmpty || hasExplicitLayout(df)) df
+    else {
+      import org.apache.spark.sql.functions.col
+      df.repartition(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        partitionColumns.map(col): _*)
+    }
+
   private def writeVersion(df: DataFrame, next: String): Unit = {
     writeData(df, next, "graft:writeVersion")
     ensureReadable(Paths.get(path, next), df)
@@ -567,7 +588,7 @@ final class ParquetTable(val path: String,
     * dir (the exact collision reservation exists to prevent).
     */
   private def writeData(df: DataFrame, next: String, label: String): Unit = {
-    val w = df.write.mode("append")
+    val w = byLeaf(df).write.mode("append")
     JobLabel(df.sparkSession, s"$label $path/$next") {
       (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
        else w).parquet(s"$path/$next")

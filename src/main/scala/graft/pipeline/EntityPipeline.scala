@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.ParquetTable
+import graft.io.{JobLabel, ParquetTable}
 import graft.merge.MergeOps
 import graft.validate.Validators
 
@@ -141,21 +141,22 @@ final class EntityPipeline(spark: SparkSession, warehouse: Warehouse,
     * derive partition columns, stamp ingestion time, then idempotent
     * insert-only merge on every non-ingestion-time column.
     */
-  def ingestBronze(source: DataFrame): ParquetTable = {
-    val srcCols = source.columns.toIndexedSeq.map(col)
-    val w = Window.partitionBy(srcCols: _*).orderBy(srcCols: _*)
-    val staged = cfg.derivePartitions(
-      source.withColumn("window_id", row_number().over(w)))
-      .withColumn("bronze_ingestion_time", clock())
-    warehouse.bronze(cfg).writeMerged(spark, staged)(
-      MergeOps.insertIfAbsent(_, _, MergeOps.mergeKeyColumns(staged.columns.toSeq)))
-  }
+  def ingestBronze(source: DataFrame): ParquetTable =
+    JobLabel(spark, s"graft:bronze ${cfg.name}") {
+      val srcCols = source.columns.toIndexedSeq.map(col)
+      val w = Window.partitionBy(srcCols: _*).orderBy(srcCols: _*)
+      val staged = cfg.derivePartitions(
+        source.withColumn("window_id", row_number().over(w)))
+        .withColumn("bronze_ingestion_time", clock())
+      warehouse.bronze(cfg).writeMerged(spark, staged)(
+        MergeOps.insertIfAbsent(_, _, MergeOps.mergeKeyColumns(staged.columns.toSeq)))
+    }
 
   /** E2 (reference Silver-Validation-Orders.py:47-155): rename, seed
     * diagnostics, ingestion-status, dedup, column + FK validation, split
     * valid→silver / invalid→DLQ with reconciliation.
     */
-  def validateSilver(): Unit = {
+  def validateSilver(): Unit = JobLabel(spark, s"graft:silver ${cfg.name}") {
     val bronze = cfg.preValidate(
       cfg.renames.foldLeft(warehouse.bronze(cfg).read(spark)) {
         case (d, (from, to)) => d.withColumnRenamed(from, to)
@@ -184,8 +185,7 @@ final class EntityPipeline(spark: SparkSession, warehouse: Warehouse,
         dlqRows = dlqRows.withColumn(InvalidRelCol,
           col(InvalidRelCol).cast("array<string>"))
 
-      reconcile("bronze", df.count(), "silver+dlq",
-        silverRows.count() + dlqRows.count())
+      EntityPipeline.reconcileSplit(cfg.name, df)
 
       silverT.writeMerged(spark, silverRows)(
         MergeOps.insertIfAbsent(_, _, cfg.idColumns))
@@ -208,7 +208,7 @@ final class EntityPipeline(spark: SparkSession, warehouse: Warehouse,
     * re-validate + promote (customers/addresses shape) or revive rows whose
     * key has meanwhile been ingested (orders/items/order_details shape).
     */
-  def cleanseDlq(): Unit = {
+  def cleanseDlq(): Unit = JobLabel(spark, s"graft:dlq ${cfg.name}") {
     val dlqT = warehouse.dlq(cfg)
     val silverT = warehouse.silver(cfg)
     var dlq = dlqT.read(spark)
@@ -268,8 +268,8 @@ final class EntityPipeline(spark: SparkSession, warehouse: Warehouse,
     val countSilver = silverT.read(spark).count()
     val countInvalidDlq = dlqT.read(spark)
       .filter(col(StatusCol) === "invalid").count()
-    reconcile("bronze", countBronze, "silver+invalid_dlq",
-      countSilver + countInvalidDlq)
+    EntityPipeline.reconcile(cfg.name, "bronze", countBronze,
+      "silver+invalid_dlq", countSilver + countInvalidDlq)
   }
 
   /** S8: update-only merge of the refreshed DLQ rows back into the DLQ
@@ -313,12 +313,30 @@ final class EntityPipeline(spark: SparkSession, warehouse: Warehouse,
 
   private def emptySilver(renamedBronze: DataFrame): DataFrame =
     promoteToSilver(renamedBronze).limit(0)
+}
+
+object EntityPipeline {
+  import Validators.StatusCol
+
+  /** V8 at validation: every row of the validated frame goes to silver
+    * (`valid`) or the DLQ (`invalid`). One aggregate counts all three
+    * sides in a single pass over the cached frame; a row with any other
+    * status is counted on neither side and trips [[reconcile]].
+    */
+  private[graft] def reconcileSplit(entity: String,
+      validated: DataFrame): Unit = {
+    val r = validated.agg(count(lit(1)),
+      count_if(col(StatusCol) === "valid"),
+      count_if(col(StatusCol) === "invalid")).head()
+    reconcile(entity, "bronze", r.getLong(0), "silver+dlq",
+      r.getLong(1) + r.getLong(2))
+  }
 
   /** V8 (reference Silver-Validation-Customers.py:97-98): count
     * reconciliation invariant.
     */
-  private def reconcile(leftName: String, left: Long, rightName: String,
-      right: Long): Unit =
+  private def reconcile(entity: String, leftName: String, left: Long,
+      rightName: String, right: Long): Unit =
     require(left == right,
-      s"reconciliation failed for ${cfg.name}: $leftName=$left but $rightName=$right")
+      s"reconciliation failed for $entity: $leftName=$left but $rightName=$right")
 }

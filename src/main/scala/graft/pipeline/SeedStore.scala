@@ -177,19 +177,64 @@ object SeedStore {
     Seq(customers, addresses, items, orders, orderDetails)
 
   /** Full medallion run in FK dependency order (reference readme.md:70-88):
-    * bronze all → silver+DLQ for parents → silver+DLQ for orders → then
-    * order_details.
+    * the five bronze ingests at once → the silver+DLQ chains of the three
+    * parents at once → silver+DLQ for orders → then order_details. Only
+    * the foreign keys order the stages: an entity reads its own tables
+    * and, at validation, its parents' silver.
     */
   def runAll(spark: SparkSession, warehouse: Warehouse,
       sources: Map[String, org.apache.spark.sql.DataFrame],
       clock: () => Column = () => current_timestamp()): Unit = {
     val pipelines = entities.map(c =>
       c.name -> new EntityPipeline(spark, warehouse, c, clock)).toMap
-    entities.foreach(c => pipelines(c.name).ingestBronze(sources(c.name)))
-    Seq("customers", "addresses", "items").foreach { n =>
+    def chain(n: String): () => Unit = () => {
       pipelines(n).validateSilver(); pipelines(n).cleanseDlq()
     }
-    pipelines("orders").validateSilver(); pipelines("orders").cleanseDlq()
-    pipelines("order_details").validateSilver(); pipelines("order_details").cleanseDlq()
+    IndependentSteps.run(spark)(entities.map(c =>
+      () => { pipelines(c.name).ingestBronze(sources(c.name)); () }): _*)
+    IndependentSteps.run(spark)(
+      chain("customers"), chain("addresses"), chain("items"))
+    chain("orders")()
+    chain("order_details")()
+  }
+}
+
+/** Runs a fixed list of independent steps at once, one thread per step
+  * (at most [[MaxSteps]], the medallion run's widest fan-out), and waits
+  * for all of them. Steps must not read what another step writes. There
+  * is no pool-size option: the step list is the bound.
+  *
+  * Every step runs to its end; then the first failed step in list order
+  * rethrows, with the later failures suppressed on it. The threads are
+  * joined before returning. Each starts outside any SQL execution: a
+  * child thread inherits the caller's local properties, so a step
+  * started from inside a SQL command would otherwise run its queries as
+  * nested executions of that command.
+  */
+private[graft] object IndependentSteps {
+  private val MaxSteps = 5
+
+  def run(spark: SparkSession)(steps: (() => Unit)*): Unit = {
+    require(steps.size <= MaxSteps,
+      s"${steps.size} independent steps; at most $MaxSteps run at once")
+    val sc = spark.sparkContext
+    val failures = new Array[Throwable](steps.size)
+    val threads = steps.zipWithIndex.map { case (step, i) =>
+      val t = new Thread(() => {
+        Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+          .foreach(sc.setLocalProperty(_, null))
+        try step() catch { case e: Throwable => failures(i) = e }
+      }, s"graft-step-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.filter(_ != null).toList match {
+      case first :: rest =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case Nil => ()
+    }
   }
 }

@@ -14,7 +14,7 @@ import graft.SparkEntry
 object DumpQuery {
   def main(args: Array[String]): Unit = {
     val (dir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.HarnessCpus()
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .master(s"local[$cpus]")

@@ -248,7 +248,7 @@ object PlanAudit {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val out = args.headOption.getOrElse("PLANAUDIT.json")
     val detailPath = args.drop(1).headOption.getOrElse("BENCH_DETAIL.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.HarnessCpus()
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .master(s"local[$cpus]")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 object StatsProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = graft.HarnessCpus()
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .master(s"local[$cpus]")

@@ -25,7 +25,7 @@ object TimeQuery {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.HarnessCpus()
     val passes = sys.env.getOrElse("SPARK_GRAFT_TQ_PASSES", "3").toInt
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")

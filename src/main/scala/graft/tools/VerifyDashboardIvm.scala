@@ -57,7 +57,7 @@ object VerifyDashboardIvm {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("data/sf1")
     val outPath = args.drop(1).headOption.getOrElse("VERIFY_DASH_sf1.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.HarnessCpus()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -2,12 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.gold.{Dashboard, GoldBuilds}
-import graft.pipeline.{EntityPipeline, SeedStore, Warehouse}
+import graft.gold.{Dashboard, GoldBuilds, GoldIncremental}
+import graft.pipeline.{EntityPipeline, IndependentSteps, SeedStore, Warehouse}
 
 /** E1→E2→E2'→E3 end-to-end: dirty sources through Bronze → Silver/DLQ →
   * DLQ cleansing → Gold → dashboard, with the reference's recovery and
@@ -51,6 +51,17 @@ class PipelineSpec extends AnyFunSuite {
       (101, 1000, 1),                 // valid
       (103, 9999, 5))                 // FK miss on item
       .toDF("OrderId", "ItemId", "Quantity"))
+
+  // batch 2: the source has grown (the reference re-reads the whole source
+  // dir each run) — new valid customer + new order for them; later clock
+  private val clock2 = () => to_timestamp(lit("2024-02-01 00:00:00"))
+  private def grown: Map[String, DataFrame] = sources
+    .updated("customers", sources("customers").unionByName(
+      Seq((7, "affiliate", "regular", "2023-04-01 10:00:00"))
+        .toDF("id", "type", "status", "CreatedOn")))
+    .updated("orders", sources("orders").unionByName(
+      Seq((7, "2023-04-02 10:00:00", 13, "2023-04-05", "2023-04-06", 105))
+        .toDF("customerId", "createdOn", "addressId", "deliveryDate", "deliveredOn", "id")))
 
   private def silverCount(w: Warehouse, e: String): Long =
     w.silverByName(e).read(spark).count()
@@ -154,16 +165,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(w.table("dlq_customers").read(spark).count() == 5)
     assert(dash.totalCustomers.head.getLong(0) == 4L)
 
-    // batch 2: the source has grown (the reference re-reads the whole source
-    // dir each run) — new valid customer + new order for them; later clock
-    val clock2 = () => to_timestamp(lit("2024-02-01 00:00:00"))
-    val grown = sources
-      .updated("customers", sources("customers").unionByName(
-        Seq((7, "affiliate", "regular", "2023-04-01 10:00:00"))
-          .toDF("id", "type", "status", "CreatedOn")))
-      .updated("orders", sources("orders").unionByName(
-        Seq((7, "2023-04-02 10:00:00", 13, "2023-04-05", "2023-04-06", 105))
-          .toDF("customerId", "createdOn", "addressId", "deliveryDate", "deliveredOn", "id")))
     SeedStore.runAll(spark, w, grown, clock2)
     new GoldBuilds(spark, w).buildAll()
 
@@ -268,5 +269,144 @@ class PipelineSpec extends AnyFunSuite {
     assert(calls == 1, "constructing the pipeline must authenticate first")
     p.ingestBronze(sources("customers"))
     assert(w.table("bronze_customers").read(spark).count() > 0)
+  }
+
+  private val entityNames = SeedStore.entities.map(_.name)
+  private val goldNames = Seq("customer_breakdown", "customer_status_by_city",
+    "orders_by_customer_week", "orders_by_city_year_month",
+    "orders_type_delivery_time")
+
+  /** Every silver, DLQ and gold table's rows, sorted. */
+  private def snapshot(w: Warehouse): Map[String, Seq[Seq[Any]]] =
+    (entityNames.flatMap(e => Seq(s"silver_$e", s"dlq_$e")) ++
+      goldNames.map(g => s"gold_$g"))
+      .map(n => n -> TestSpark.rows(w.table(n).read(spark))).toMap
+
+  /** `runAll` then `advanceAll`, spelled out one call at a time. */
+  private def serialRun(w: Warehouse, src: Map[String, DataFrame],
+      at: () => Column): Unit = {
+    val ps = SeedStore.entities.map(c =>
+      c.name -> new EntityPipeline(spark, w, c, at)).toMap
+    entityNames.foreach(n => ps(n).ingestBronze(src(n)))
+    entityNames.foreach { n => ps(n).validateSilver(); ps(n).cleanseDlq() }
+    val g = new GoldIncremental(spark, w)
+    g.customerBreakdown(); g.customerStatusByCity(); g.ordersByCustomerWeek()
+    g.ordersByCityYearMonth(); g.ordersTypeDeliveryTime()
+  }
+
+  /** Commit timestamps of a table, from its commit log. */
+  private def commitTimes(w: Warehouse, n: String): Seq[Long] = {
+    val t = w.table(n)
+    graft.io.VersionLog.recordsUpTo(t.path, t.version).flatMap(_.ts)
+  }
+
+  test("concurrent runAll + advanceAll equal the serial composition and " +
+      "keep the foreign-key order") {
+    // batch 2's advance folds the new rows in incrementally
+    val batches = Seq((sources, clock), (grown, clock2))
+    val serial = new Warehouse(Files.createTempDirectory("graft_wh_serial").toString)
+    val expected = batches.map { case (src, at) =>
+      serialRun(serial, src, at); snapshot(serial)
+    }
+    (1 to 3).foreach { i =>
+      val w = new Warehouse(Files.createTempDirectory(s"graft_wh_conc$i").toString)
+      batches.zip(expected).zipWithIndex.foreach { case (((src, at), want), b) =>
+        SeedStore.runAll(spark, w, src, at)
+        new GoldIncremental(spark, w).advanceAll()
+        val got = snapshot(w)
+        want.keys.foreach(n =>
+          assert(got(n) == want(n), s"run $i, batch ${b + 1}: $n"))
+        if (b == 0) {
+          // no orders commit before the last commit of a parent entity
+          val lastParent = Seq("customers", "addresses", "items")
+            .flatMap(e => Seq(s"silver_$e", s"dlq_$e"))
+            .flatMap(commitTimes(w, _)).max
+          val firstOrders = Seq("silver_orders", "dlq_orders")
+            .flatMap(commitTimes(w, _)).min
+          assert(firstOrders >= lastParent, s"run $i")
+        }
+      }
+    }
+  }
+
+  test("a failing step: runAll rethrows it after every other step ended, " +
+      "and leaves no thread and no staged version behind") {
+    val boom = udf((s: String) => {
+      if (s != null) throw new IllegalStateException("boom in items")
+      s
+    })
+    val bad = sources.updated("items",
+      sources("items").withColumn("Codes", boom(col("Codes"))))
+    val w = new Warehouse(Files.createTempDirectory("graft_wh_fail").toString)
+    val e = intercept[Throwable](SeedStore.runAll(spark, w, bad, clock))
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom in items")), e)
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(t => t.getName.startsWith("graft-step-") && t.isAlive))
+    // the other bronze ingests ran to their commit; nothing is staged
+    assert(entityNames.filterNot(_ == "items")
+      .forall(n => w.table(s"bronze_$n").exists))
+    assert(!w.table("bronze_items").exists)
+    val walk = Files.walk(java.nio.file.Paths.get(w.root))
+    try assert(!walk.iterator().asScala.exists(_.getFileName.toString == "_staging"))
+    finally walk.close()
+  }
+
+  test("independent steps: the first failure wins with the rest " +
+      "suppressed; steps run outside the caller's SQL execution") {
+    var ran = false
+    val e = intercept[IllegalStateException](IndependentSteps.run(spark)(
+      () => { ran = true }, () => throw new IllegalStateException("first"),
+      () => throw new IllegalArgumentException("second")))
+    assert(ran && e.getMessage == "first")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("second"))
+    val sc = spark.sparkContext
+    val ids = Seq("spark.sql.execution.id", "spark.sql.execution.root.id")
+    var seen = Seq.empty[String]
+    ids.foreach(sc.setLocalProperty(_, "12345"))
+    try IndependentSteps.run(spark)(() => {
+      seen = ids.map(sc.getLocalProperty)
+      assert(spark.range(3).count() == 3)
+    })
+    finally ids.foreach(sc.setLocalProperty(_, null))
+    assert(seen == Seq(null, null))
+  }
+
+  test("every Spark job of runAll and advanceAll carries a graft: label") {
+    val descriptions =
+      new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descriptions.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("<none>"))
+    }
+    val w = new Warehouse(Files.createTempDirectory("graft_wh_labels").toString)
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      SeedStore.runAll(spark, w, sources, clock)
+      new GoldIncremental(spark, w).advanceAll()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val all = descriptions.asScala.toSeq
+    assert(all.nonEmpty)
+    assert(all.forall(_.startsWith("graft:")),
+      all.filterNot(_.startsWith("graft:")).distinct)
+  }
+
+  test("reconcile trips on a status that is neither valid nor invalid") {
+    import graft.validate.Validators.StatusCol
+    val split = Seq(("a", "valid"), ("b", "invalid"), ("c", "invalid"))
+      .toDF("id", StatusCol)
+    EntityPipeline.reconcileSplit("probe", split)
+    val broken = split.union(Seq(("d", "pending")).toDF("id", StatusCol))
+    val e = intercept[IllegalArgumentException](
+      EntityPipeline.reconcileSplit("probe", broken))
+    assert(e.getMessage.endsWith(
+      "reconciliation failed for probe: bronze=4 but silver+dlq=3"))
   }
 }

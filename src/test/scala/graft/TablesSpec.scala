@@ -1016,4 +1016,52 @@ class TablesSpec extends AnyFunSuite {
     assert(oldB == newB && oldB.nonEmpty,
       "untouched leaf must be hard-linked, not rewritten")
   }
+
+  /** The data files a table's live commit wrote, by leaf dir. */
+  private def writtenByLeaf(t: ParquetTable): Map[String, Seq[String]] =
+    graft.io.VersionLog.readRecord(t.path, t.version).get.adds.map(_.rel)
+      .groupBy(_.split('/').init.mkString("/"))
+
+  /** The writing task's partition id, from a `part-NNNNN-<uuid>` name. */
+  private def taskOf(rel: String): String = rel.split('/').last.split('-')(1)
+
+  test("a partitioned overwrite or append writes one file per leaf from " +
+      "several tasks; a declared layout and the replace REBALANCE are kept") {
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_leaf").toString
+    // four input partitions, each holding rows of all three leaves
+    def spread(from: Long) = spark.range(from, from + 40, 1, 4)
+      .select(col("id"), (col("id") % 3).as("p"))
+    val leaves = Set("p=0", "p=1", "p=2")
+    def oneFilePerLeafFromSeveralTasks(t: ParquetTable): Unit = {
+      val written = writtenByLeaf(t)
+      assert(written.keySet == leaves)
+      assert(written.values.forall(_.size == 1), written)
+      assert(written.values.flatten.map(taskOf).toSet.size > 1, written)
+    }
+    val t = new ParquetTable(s"$dir/t", partitionColumns = Seq("p"))
+    t.overwrite(spread(0))
+    oneFilePerLeafFromSeveralTasks(t)
+    t.appendVersion(spread(100))
+    oneFilePerLeafFromSeveralTasks(t)
+    assert(t.read(spark).count() == 80)
+
+    // a declared layout is written as declared: every writer task of a
+    // range split or a sorted frame writes into every leaf
+    val ranged = new ParquetTable(s"$dir/ranged", partitionColumns = Seq("p"))
+    ranged.overwrite(spread(0).repartitionByRange(2, col("id")))
+    assert(writtenByLeaf(ranged).values.forall(_.size == 2))
+    val sorted = new ParquetTable(s"$dir/sorted", partitionColumns = Seq("p"))
+    sorted.overwrite(spread(0).sortWithinPartitions("id"))
+    assert(writtenByLeaf(sorted).values.forall(_.size == 4))
+
+    // the replace path keeps its REBALANCE, which AQE sizes to one task
+    // for these few KB
+    t.replacePartitions(spread(200).filter(col("p") =!= 2))
+    val replaced = writtenByLeaf(t)
+    assert(replaced.keySet == Set("p=0", "p=1"))
+    assert(replaced.values.flatten.map(taskOf).toSet.size == 1, replaced)
+    // leaf p=2 keeps its 26 rows; p=0 and p=1 now hold spread(200)'s 26
+    assert(t.read(spark).count() == 52)
+  }
 }

@@ -22,8 +22,8 @@ for attempt in 1 2 3 4 5 6; do
   # a stale output from a previous round/attempt must never satisfy the
   # clean-census check below — remove it before each attempt
   rm -f "$OUT"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    SPARK_GRAFT_BENCH_DETAIL="$OUT" \
+  # graft.Bench defaults to the sf0.1 test data and the host's CPU count
+  SPARK_GRAFT_BENCH_DETAIL="$OUT" \
     sbt -batch "runMain graft.Bench" > /tmp/bench_gate_attempt_$attempt.log 2>&1
   rc=$?
   if [ "$rc" -ne 0 ]; then
