@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.io.{JobLabel, ParquetTable, Sidecar}
+import graft.io.{JobLabel, ParquetTable}
 import graft.pipeline.{IndependentSteps, Warehouse}
 
 /** Incremental (CDF-driven) maintenance of the FIVE real reference gold
@@ -55,33 +55,27 @@ import graft.pipeline.{IndependentSteps, Warehouse}
   * the documented route, distinct counts go to q86's sketch rollup;
   * none of the five reference tables need either.
   *
-  * Crash safety is [[GoldMaintenance]]'s: applied source versions live
-  * in a `_cdf_applied_sources` sidecar INSIDE the gold's live version
-  * dir, and `overwrite` creates the new version WITHOUT the marker — a
-  * crash between the gold write and the sidecar write reads as
-  * "no marker" and falls back to the one full rebuild, never a
-  * double-applied delta. A replayed advance (marker already at the
-  * live source versions) is a no-op. GoldIncrementalSpec proves incremental ≡
-  * batch rebuild for all five tables across insert/update/delete
-  * commit mixes, plus the replay and crash-window laws.
+  * Each gold commit carries its applied source versions as its marker
+  * (one entry per source, [[ParquetTable.applied]]): no marker → the
+  * one full rebuild, never a double-applied delta; a marker already at
+  * the live source versions → a replay that commits nothing.
+  * GoldIncrementalSpec proves incremental ≡ batch rebuild for all five
+  * tables across insert/update/delete commit mixes, plus the replay and
+  * lost-marker laws.
   */
 final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
 
   // S5: same authenticate-before-first-read preamble as the pipelines
   warehouse.auth.authenticate(spark)
 
-  private val Marker = "_cdf_applied_sources"
-
   /** Broadcast bound (rows) for the changes-sized frames that probe
     * corpus-sized silver reads (the affected-anchor set and the
     * pair-loss key set): one narrow key column, so 1M rows ≈ tens of MB
     * on the driver — comfortably broadcastable — while a mass-change
     * advance past the bound degrades to the shuffled semi-join, never
-    * an OOM. Tunable per deployment via `graft.gold.broadcastAnchors`.
+    * an OOM.
     */
-  private def maxBroadcastAnchors: Long =
-    spark.conf.getOption("graft.gold.broadcastAnchors")
-      .flatMap(_.toLongOption).getOrElse(1L << 20)
+  private val MaxBroadcastAnchors = 1L << 20
 
   /** An additive measure: the stored column is sum(of) over J. */
   private final case class Measure(name: String, of: Column)
@@ -90,16 +84,6 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
     Measure(name, when(c.isNotNull, 1L).otherwise(0L))
   private def sumOf(name: String, c: Column) =
     Measure(name, coalesce(c.cast("long"), lit(0L)))
-
-  /** Applied source versions recorded in the gold's live version dir. */
-  private[graft] def appliedVersions(
-      gold: ParquetTable): Option[Map[String, Int]] =
-    Sidecar.read(gold.path, Nil, Marker).map(_.flatMap { line =>
-      line.split("=", 2) match {
-        case Array(k, v) => v.toIntOption.map(k -> _)
-        case _ => None
-      }
-    }.toMap)
 
   // <=> not ===: the fold explicitly supports NULL grain keys, so a
   // changed row whose anchor is NULL must put the NULL-anchor group in
@@ -177,13 +161,11 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
         (derived ++ distincts.map(d => d.name ->
           coalesce(hll_sketch_estimate(col(d.sketchCol)), lit(0L))))
           .foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-      // a sidecar whose key set differs from the current source list (a
-      // table gained or lost a source since the marker was written) reads
-      // as "no marker" — the documented full-rebuild fallback — instead of
-      // a NoSuchElementException bricking every subsequent advance
-      val applied = (if (gold.exists) appliedVersions(gold) else None)
-        .filter(_.keySet == sources.map(_._1).toSet)
-      applied match {
+      // a marker whose key set differs from the current source list (none
+      // at all, or a table gained or lost a source since it was written)
+      // reads as "no marker" — the full-rebuild path — instead of a
+      // NoSuchElementException bricking every subsequent advance
+      Some(gold.applied).filter(_.keySet == newVs.keySet) match {
         case Some(vs) if vs == newVs => () // already current — replay no-op
         case Some(vs) =>
           val oldF = sources.map { case (n, t) =>
@@ -206,7 +188,7 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
           // mass-change advance whose anchor set outgrows the bound falls
           // back to the shuffled semi-join instead of an OOM broadcast.
           val aff =
-            if (affRaw.count() <= maxBroadcastAnchors) broadcast(affRaw)
+            if (affRaw.count() <= MaxBroadcastAnchors) broadcast(affRaw)
             else affRaw
           // with distinct measures the two restricted derivations feed the
           // signed delta AND the sketch fold's pair-loss/new-side subtrees
@@ -259,7 +241,8 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
             if (distincts.isEmpty) (folded0, () => ())
             else foldSketches(folded0, oldJ, newJ, keys, distincts,
               () => derive(newF, None))
-          try gold.overwrite(GoldMaintenance.goldSized(withDerived(folded)))
+          try gold.overwrite(GoldMaintenance.goldSized(withDerived(folded)),
+            newVs)
           finally {
             affRaw.unpersist()
             if (distincts.nonEmpty) { oldJ.unpersist(); newJ.unpersist() }
@@ -267,12 +250,10 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
             ()
           }
         case None =>
-          // first build (or crash-window fallback): the one full pass
+          // first build (or no marker): the one full pass
           gold.overwrite(GoldMaintenance.goldSized(withDerived(
-            aggAll(derive(newF, None), keys, measures, distincts))))
+            aggAll(derive(newF, None), keys, measures, distincts))), newVs)
       }
-      Sidecar.write(java.nio.file.Paths.get(gold.currentPath), Marker,
-        sources.map { case (n, _) => s"$n=${newVs(n)}" })
       gold
     }
 
@@ -306,7 +287,7 @@ final class GoldIncremental(spark: SparkSession, warehouse: Warehouse) {
     // lost-group keys probe the CORPUS-sized re-derived J below — same
     // broadcast-when-bounded discipline as the affected-anchor set
     val lostN = lostRaw.count()
-    val lost = if (lostN <= maxBroadcastAnchors) broadcast(lostRaw)
+    val lost = if (lostN <= MaxBroadcastAnchors) broadcast(lostRaw)
                else lostRaw;
     {
       val rs =

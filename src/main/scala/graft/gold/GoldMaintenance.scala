@@ -3,7 +3,7 @@ package graft.gold
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.{ParquetTable, Sidecar}
+import graft.io.ParquetTable
 
 /** CDF-driven incremental GOLD maintenance — the warehouse loop that
   * closes the versioned-table story: a gold AGGREGATE table kept current
@@ -11,28 +11,30 @@ import graft.io.{ParquetTable, Sidecar}
   * feed ([[ParquetTable.changesBetween]], q87), never a full source
   * rescan after the first build.
   *
-  * Mechanics: the gold table records which source version it reflects in
-  * a `_cdf_applied` sidecar inside its live version dir (state and the
-  * data it describes live and die together — the [[Sidecar]] contract).
-  * [[advance]] folds the signed multiset delta between that version and
-  * the source's live version into the aggregate: inserts +1/+value,
-  * deletes −1/−value, an update = its delete+insert pair — count and
-  * SUM are the distributive aggregates for which signed folding is
-  * EXACT, so incremental maintenance lands bit-identically on the full
-  * rebuild (q97's oracle pins exactly that; non-distributive aggregates
-  * like distinct would need q86's sketch route instead). Groups whose
-  * count reaches zero are dropped, not left as ghost rows.
+  * Mechanics: each gold commit carries the source version it reflects
+  * as its maintenance marker ([[ParquetTable.applied]]), so data and
+  * marker publish together. [[advance]] folds the signed multiset delta
+  * between that version and the source's live version into the
+  * aggregate: inserts +1/+value, deletes −1/−value, an update = its
+  * delete+insert pair — count and SUM are the distributive aggregates
+  * for which signed folding is EXACT, so incremental maintenance lands
+  * bit-identically on the full rebuild (q97's oracle pins exactly
+  * that; non-distributive aggregates like distinct would need q86's
+  * sketch route instead). Groups whose count reaches zero are dropped,
+  * not left as ghost rows.
   *
   * Scale shape: per advance the work is O(|changes| + |gold|) — the CDF
   * diff of two versions plus a gold-sized full-outer merge — while the
   * source is never rescanned. Replay-safe the same way the streaming
-  * mirrors are: an advance that finds the sidecar already at the live
-  * version is a no-op, so re-running a maintenance job cannot
-  * double-apply a delta (StreamingSpec proves both laws).
+  * mirrors are: an advance that finds the marker already at the live
+  * version commits nothing, so re-running a maintenance job cannot
+  * double-apply a delta (StreamingSpec proves both laws); a gold version
+  * without a marker takes the full-rebuild path.
   */
 object GoldMaintenance {
 
-  private val AppliedMarker = "_cdf_applied"
+  /** The marker key holding the source version a gold table reflects. */
+  private val SourceKey = "source"
 
   /** Right-size a gold write: gold relations are GROUP-cardinality
     * bounded by design (every table in this module aggregates to its
@@ -70,8 +72,7 @@ object GoldMaintenance {
 
   /** The source version the gold table currently reflects, if any. */
   def appliedVersion(gold: ParquetTable): Option[Int] =
-    Sidecar.read(gold.path, Nil, AppliedMarker)
-      .flatMap(_.headOption).flatMap(_.toIntOption)
+    gold.applied.get(SourceKey)
 
   /** The feed-retention horizon a SOURCE table must honor for this set
     * of consumers ([[ParquetTable.vacuumKeepingFeeds]]): a consumer at
@@ -144,15 +145,15 @@ object GoldMaintenance {
     * CDC streams are dominated by inserts, so the rescan is the rare
     * path; an insert-only commit performs ZERO source reads (the spec
     * asserts rescannedGroups == 0). Returns (source version now
-    * reflected, number of groups rescanned). Crash/replay laws are
-    * [[advance]]'s (same sidecar).
+    * reflected, number of groups rescanned). Replay and marker laws are
+    * [[advance]]'s.
     */
   def advanceMinMax(spark: SparkSession, source: ParquetTable,
       gold: ParquetTable, keys: Seq[String], value: Column): (Int, Long) = {
     val toV = source.version
-    val fromV = if (gold.exists) appliedVersion(gold) else None
+    val marker = Map(SourceKey -> toV)
     var rescanned = 0L
-    fromV match {
+    appliedVersion(gold) match {
       case Some(v) if v == toV => () // already current — replay no-op
       case Some(v) =>
         val changes = source.changesBetween(spark, v, toV)
@@ -207,14 +208,12 @@ object GoldMaintenance {
                 col("__has_del")): _*)
           }
           gold.overwrite(goldSized(folded.filter(col("n_rows") > 0)
-            .drop("__has_del")))
+            .drop("__has_del")), marker)
         } finally delta.unpersist()
       case None =>
         gold.overwrite(goldSized(aggregateMinMax(source.read(spark), keys,
-          value)))
+          value)), marker)
     }
-    Sidecar.write(java.nio.file.Paths.get(gold.currentPath), AppliedMarker,
-      Seq(toV.toString))
     (toV, rescanned)
   }
 
@@ -259,25 +258,23 @@ object GoldMaintenance {
     * all: every advance is O(|changes| + |gold|), even delete-heavy
     * ones, and fold ≡ rebuild is bit-exact (q116's oracle claim).
     * Derived percentile columns are recomputed from the folded
-    * histogram after every advance. Crash/replay laws are [[advance]]'s
-    * (same sidecar).
+    * histogram after every advance. Replay and marker laws are
+    * [[advance]]'s.
     */
   def advancePercentile(spark: SparkSession, source: ParquetTable,
       gold: ParquetTable, keys: Seq[String], value: Column,
       ps: Seq[(String, Int, Int)]): Int = {
     val toV = source.version
-    val fromV = if (gold.exists) appliedVersion(gold) else None
-    fromV match {
+    val marker = Map(SourceKey -> toV)
+    appliedVersion(gold) match {
       case Some(v) if v == toV => () // already current — replay no-op
       case Some(v) =>
         gold.overwrite(goldSized(percentileIncrementalPlan(spark, source,
-          gold, keys, value, ps, v, toV)))
+          gold, keys, value, ps, v, toV)), marker)
       case None =>
         gold.overwrite(goldSized(aggregatePercentile(source.read(spark),
-          keys, value, ps)))
+          keys, value, ps)), marker)
     }
-    Sidecar.write(java.nio.file.Paths.get(gold.currentPath), AppliedMarker,
-      Seq(toV.toString))
     toV
   }
 
@@ -352,17 +349,16 @@ object GoldMaintenance {
   def advance(spark: SparkSession, source: ParquetTable, gold: ParquetTable,
       keys: Seq[String], value: Column): Int = {
     val toV = source.version
-    val fromV = if (gold.exists) appliedVersion(gold) else None
-    fromV match {
+    val marker = Map(SourceKey -> toV)
+    appliedVersion(gold) match {
       case Some(v) if v == toV => () // already current — replay no-op
       case Some(v) =>
         gold.overwrite(goldSized(
-          incrementalPlan(spark, source, gold, keys, value, v, toV)))
+          incrementalPlan(spark, source, gold, keys, value, v, toV)), marker)
       case None =>
-        gold.overwrite(goldSized(aggregate(source.read(spark), keys, value)))
+        gold.overwrite(goldSized(aggregate(source.read(spark), keys, value)),
+          marker)
     }
-    Sidecar.write(java.nio.file.Paths.get(gold.currentPath), AppliedMarker,
-      Seq(toV.toString))
     toV
   }
 }

@@ -3,19 +3,15 @@ package graft.io
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-/** Crash-safe model-sidecar IO shared by the persisted ANN indexes
-  * ([[graft.northstar.IvfIndex]], [[graft.northstar.IvfPqIndex]]): small
-  * text files (KBs — centroids, codebooks) that live INSIDE a
-  * [[ParquetTable]]'s live version dir (underscore-prefixed so Spark's
-  * file index ignores them), so model state and the data it quantized
-  * live and die together across rebuilds.
-  *
-  * The crash-safety story lives HERE, once: writes go tmp-then-atomic-
-  * rename so a torn write is never visible under the real name, and reads
-  * treat ANY failure (missing pointer, missing file, IO error) as
-  * no-sidecar — callers rebuild from the corpus rather than trusting
-  * partial state. Format-specific header/body parsing stays with each
-  * index; this module owns only the placement + atomicity mechanics.
+/** Model-sidecar IO of the two frozen persisted ANN indexes
+  * ([[graft.northstar.IvfIndex]], [[graft.northstar.IvfPqIndex]]) — its
+  * only users: small text files (centroids, codebooks) written INTO a
+  * [[ParquetTable]]'s live version dir after its commit, underscore-
+  * prefixed so Spark's file index ignores them. New state about a
+  * commit's data belongs in its log record ([[ParquetTable.applied]]),
+  * published with the data, not here. Writes go tmp-then-atomic-rename
+  * (a torn write is never visible under the real name); reads treat ANY
+  * failure as no-sidecar, and the indexes then rebuild from the corpus.
   */
 object Sidecar {
 

@@ -238,9 +238,11 @@ final class ParquetTable(val path: String,
   /** Full rewrite as a new version + atomic pointer swap. Concurrent
     * writers each stage into their own reserved version dir; the final
     * swap is last-writer-wins — use [[overwriteIf]] when a stale commit
-    * must FAIL instead of clobbering.
+    * must FAIL instead of clobbering. `applied`: the commit's marker.
     */
-  def overwrite(df: DataFrame): ParquetTable = commitNew(df, None, None)
+  def overwrite(df: DataFrame,
+      applied: Map[String, Int] = Map.empty): ParquetTable =
+    commitNew(df, None, None, applied)
 
   /** Optimistic-concurrency commit — the Delta/Iceberg conditional-commit
     * shape on a plain filesystem. The caller reads [[version]] (0 = table
@@ -353,7 +355,8 @@ final class ParquetTable(val path: String,
   }
 
   private def commitNew(df: DataFrame, expected: Option[Int],
-      changes: Option[DataFrame]): ParquetTable = {
+      changes: Option[DataFrame],
+      applied: Map[String, Int] = Map.empty): ParquetTable = {
     // validate the declared feed's shape BEFORE any I/O (appendVersion's
     // fail-in-milliseconds discipline)
     changes.foreach(validateFeedShape(df, _))
@@ -368,7 +371,7 @@ final class ParquetTable(val path: String,
       // OUTSIDE the lock (footer stats reads); an overwrite's adds ARE
       // the full version, so the record doubles as a full file set
       val (adds, feed) = commitCensus(next)
-      ParquetTable.Staged(adds, feed)
+      ParquetTable.Staged(adds, feed, applied = applied)
     }
   }
 
@@ -427,7 +430,8 @@ final class ParquetTable(val path: String,
       staged.adds, staged.feed, staged.removedPrefixes, staged.renamed,
       // partitioned append/replace link walks skip the base's root-level
       // flat-fallback parquet — the file-set resolution must too
-      dropRootFlat = kind != "overwrite" && partitionColumns.nonEmpty))
+      dropRootFlat = kind != "overwrite" && partitionColumns.nonEmpty,
+      applied = staged.applied))
 
   private def feedVerifyEnabled(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("graft.cdf.verifyDeclaredChanges")
@@ -700,10 +704,12 @@ final class ParquetTable(val path: String,
     * LEAF partition — the full partition-column tuple, matched against
     * the hive dir chain — and partition values must render to plain
     * path-safe strings (true for the numeric/enum keys this layer uses;
-    * values needing hive escaping are refused loudly).
+    * values needing hive escaping are refused loudly). `applied`: the
+    * commit's marker.
     */
-  def replacePartitions(df: DataFrame): ParquetTable =
-    replaceImpl(df, None, None)
+  def replacePartitions(df: DataFrame,
+      applied: Map[String, Int] = Map.empty): ParquetTable =
+    replaceImpl(df, None, None, applied = applied)
 
   /** [[replacePartitions]] + write-side change capture (the
     * [[overwriteWithChanges]] feed contract — `changes` must be the
@@ -755,8 +761,8 @@ final class ParquetTable(val path: String,
 
   private def replaceImpl(df: DataFrame, changes: Option[DataFrame],
       alsoReplace: Option[DataFrame],
-      preCollected: Option[Array[org.apache.spark.sql.Row]] = None)
-      : ParquetTable = {
+      preCollected: Option[Array[org.apache.spark.sql.Row]] = None,
+      applied: Map[String, Int] = Map.empty): ParquetTable = {
     require(partitionColumns.nonEmpty,
       "replacePartitions needs a partitioned table")
     import org.apache.spark.sql.functions.col
@@ -859,7 +865,7 @@ final class ParquetTable(val path: String,
           (0 until depth).map(i => rel.getName(i).toString).toVector)
       }
       ParquetTable.Staged(adds, feed,
-        replaced.toSeq.map(_.mkString("/")).sorted, renamed)
+        replaced.toSeq.map(_.mkString("/")).sorted, renamed, applied)
     }
   }
 
@@ -958,6 +964,16 @@ final class ParquetTable(val path: String,
   def version: Int = currentVersion
     .getOrElse(throw new IllegalStateException(s"table at $path does not exist"))
     .drop(2).toInt
+
+  /** The live version's maintenance marker (the source versions its
+    * data reflects), as its [[overwrite]]/[[replacePartitions]] recorded
+    * it or [[restoreVersion]]/[[cloneTo]] copied it. Empty ("no marker":
+    * rebuild) for any other commit, an absent table, or a missing, torn
+    * or retired log record.
+    */
+  def applied: Map[String, Int] =
+    currentVersion.flatMap(n => VersionLog.recordOf(path, n.drop(2).toInt))
+      .map(_.applied).getOrElse(Map.empty)
 
   /** Time travel: read a specific retained version (`VERSION AS OF` in
     * Delta terms) — every version dir is kept until [[vacuum]], so audits
@@ -1076,13 +1092,16 @@ final class ParquetTable(val path: String,
     * table's staged dir `next`. The record carries the source's per-file
     * stats and sizes RESOLVED FROM ITS LOG when it can (zero footer
     * re-opens); an unresolvable log degrades to the commit-time census.
+    * `srcV`'s marker rides along: it describes exactly this data.
     */
   private def linkSnapshot(srcPath: String, srcV: Int,
       next: String): ParquetTable.Staged = {
     val renamed = linkFiles(Paths.get(srcPath, f"v_$srcV%05d"),
       Paths.get(path, next))(_ => false)
     ParquetTable.Staged(VersionLog.resolveFiles(srcPath, srcV)
-      .getOrElse(commitCensus(next)._1), renamed = renamed)
+      .getOrElse(commitCensus(next)._1), renamed = renamed,
+      applied = VersionLog.recordOf(srcPath, srcV)
+        .map(_.applied).getOrElse(Map.empty))
   }
 
   /** DATA-SKIPPING read of the live version (Delta's file-stats design,
@@ -1590,7 +1609,8 @@ final class ParquetTable(val path: String,
     */
   /** Delta `DESCRIBE HISTORY`: the RESOLVABLE commit records as a
     * DataFrame — version, kind (overwrite/append/replace), the
-    * monotonic commit timestamp, and the commit's file/feed footprint.
+    * monotonic commit timestamp, the commit's file/feed footprint and
+    * its maintenance marker (`applied`, empty when it carries none).
     * History is log-bound: versions whose records retired below the
     * retention horizon are absent (the timestamp-travel rule); vacuum
     * reclaims version DIRS but never the `_log`, so history survives
@@ -1607,11 +1627,13 @@ final class ParquetTable(val path: String,
       StructField("timestamp", TimestampType, nullable = true),
       StructField("n_added_files", IntegerType, nullable = false),
       StructField("n_feed_files", IntegerType, nullable = false),
-      StructField("n_removed_prefixes", IntegerType, nullable = false)))
+      StructField("n_removed_prefixes", IntegerType, nullable = false),
+      StructField("applied", MapType(StringType, IntegerType,
+        valueContainsNull = false), nullable = false)))
     val rows = recs.map { r =>
       org.apache.spark.sql.Row(r.v, r.kind,
         r.ts.map(ms => new java.sql.Timestamp(ms)).orNull,
-        r.adds.size, r.feed.size, r.removedPrefixes.size)
+        r.adds.size, r.feed.size, r.removedPrefixes.size, r.applied)
     }
     spark.createDataFrame(rows.asJava, schema)
   }
@@ -1694,7 +1716,7 @@ final class ParquetTable(val path: String,
     * keep serving exactly as before (the feed path never reads old
     * snapshots), so IVM consumers behind the live version still
     * advance — TablesSpec proves both halves. Compute `keepFeedsFrom`
-    * from the consumers' applied-version sidecars
+    * from the consumers' maintenance markers
     * ([[graft.gold.GoldMaintenance.feedHorizon]]) or pass an explicit
     * retention horizon.
     */
@@ -1787,7 +1809,7 @@ object ParquetTable {
   /** What a staged commit contributes to its [[VersionLog.Record]]. */
   private[io] final case class Staged(adds: Seq[VersionLog.FileEntry],
       feed: Seq[String] = Nil, removedPrefixes: Seq[String] = Nil,
-      renamed: Boolean = false)
+      renamed: Boolean = false, applied: Map[String, Int] = Map.empty)
 
   private val monitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()

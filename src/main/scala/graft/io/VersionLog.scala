@@ -24,7 +24,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *    footers ONCE, at commit time — Delta's data-skipping design: file
   *    stats live in commit metadata so query planning never opens a
   *    footer), the persisted change-feed files, and for replace commits
-  *    the replaced leaf-partition prefixes.
+  *    the replaced leaf-partition prefixes, plus one
+  *    `applied=<url-encoded key>\t<version>` line per marker entry.
   *  - `ckpt_NNNNN.txt` — every [[VersionLog.CheckpointEvery]] commits: the
   *    version's FULL live file set (stats preserved) plus the records
   *    since the previous checkpoint embedded, so resolving any state or
@@ -77,11 +78,14 @@ private[graft] object VersionLog {
     * poisons file-set resolution but not step deltas; `dropRootFlat`
     * records that the commit's link walk skipped the base version's
     * ROOT-LEVEL parquet (the empty-write schema fallback — partitioned
-    * append/replace commits never carry it forward).
+    * append/replace commits never carry it forward). `applied` is the
+    * commit's maintenance marker: the source versions the data it wrote
+    * reflects (Delta's `SetTransaction` action); empty = no marker.
     */
   final case class Record(v: Int, kind: String, adds: Seq[FileEntry],
       feed: Seq[String], removedPrefixes: Seq[String], renamed: Boolean,
-      dropRootFlat: Boolean = false, ts: Option[Long] = None)
+      dropRootFlat: Boolean = false, ts: Option[Long] = None,
+      applied: Map[String, Int] = Map.empty)
 
   /** Commit wall-clock source, injectable for deterministic specs.
     * [[append]] stamps every record with `max(clock(), prev ts + 1)` so
@@ -296,6 +300,8 @@ private[graft] object VersionLog {
       s"renamed=${if (rec.renamed) 1 else 0}",
       s"dropflat=${if (rec.dropRootFlat) 1 else 0}") ++
       rec.ts.map(t => s"ts=$t").toSeq ++
+      rec.applied.toSeq.sortBy(_._1).map { case (k, v) =>
+        s"applied=${enc(k)}\t$v" } ++
       rec.feed.map(f => s"feed=${enc(f)}") ++
       rec.removedPrefixes.map(p => s"rm=${enc(p)}") ++
       rec.adds.map { f =>
@@ -306,6 +312,7 @@ private[graft] object VersionLog {
   private def parseRecordLines(lines: Seq[String]): Record = {
     var v = -1; var kind = ""; var renamed = false; var dropFlat = false
     var ts: Option[Long] = None
+    val applied = Map.newBuilder[String, Int]
     val feed = Seq.newBuilder[String]
     val rm = Seq.newBuilder[String]
     val adds = Seq.newBuilder[FileEntry]
@@ -318,6 +325,9 @@ private[graft] object VersionLog {
         case ("renamed", x) => renamed = x == "1"
         case ("dropflat", x) => dropFlat = x == "1"
         case ("ts", x) => ts = x.toLongOption
+        case ("applied", x) =>
+          val t = x.indexOf('\t')
+          applied += dec(x.substring(0, t)) -> x.substring(t + 1).toInt
         case ("feed", x) => feed += dec(x)
         case ("rm", x) => rm += dec(x)
         case ("add", x) => adds += parseFileLine(x)
@@ -327,7 +337,7 @@ private[graft] object VersionLog {
     }
     require(v > 0 && kind.nonEmpty, "record missing v/kind")
     Record(v, kind, adds.result(), feed.result(), rm.result(), renamed,
-      dropFlat, ts)
+      dropFlat, ts, applied.result())
   }
 
   private def atomicWrite(target: Path, lines: Seq[String]): Unit = {
@@ -355,7 +365,7 @@ private[graft] object VersionLog {
         else {
           val prevTs =
             if (rec.v <= 1) None
-            else timestampOf(path, rec.v - 1)
+            else recordOf(path, rec.v - 1).flatMap(_.ts)
           rec.copy(ts = Some(math.max(clock(),
             prevTs.map(_ + 1L).getOrElse(Long.MinValue))))
         }
@@ -367,12 +377,11 @@ private[graft] object VersionLog {
       }
     } catch { case _: Exception => () }
 
-  /** Version `v`'s commit wall-clock, resolved from its loose record or
-    * covering checkpoint. None for pre-timestamp legacy records or an
-    * unresolvable step.
+  /** Version `v`'s record from its loose file or covering checkpoint;
+    * None when it is missing, torn or retired.
     */
-  def timestampOf(path: String, v: Int): Option[Long] =
-    try recordAt(path, v, new LogCtx(path)).flatMap(_.ts)
+  def recordOf(path: String, v: Int): Option[Record] =
+    try recordAt(path, v, new LogCtx(path))
     catch { case _: Exception => None }
 
   /** Timestamp→version resolution with Delta's `TIMESTAMP AS OF`

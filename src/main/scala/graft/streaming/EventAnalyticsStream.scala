@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.io.{ParquetTable, Sidecar}
+import graft.io.ParquetTable
 import graft.northstar.{BpeLearn, EventOps}
 
 /** Streaming mirrors of the q77 funnel / q78 retention event analytics —
@@ -256,10 +256,10 @@ object EventAnalyticsStream {
     } finally { fresh.unpersist(); () }
   }
 
-  /** The marker tying a trained unigram model to the log version it was
-    * trained from (see [[unigramStatsStream]]).
+  /** The marker key tying a trained unigram model to the log version it
+    * was trained from (see [[unigramStatsStream]]).
     */
-  private val UnigramBuiltFrom = "_built_from_log_version"
+  private val BuiltFromKey = "log"
 
   /** Incremental q113: maintain the unigram-LM tokenizer from a document
     * stream — [[bpeStatsStream]]'s log-maintenance shape (the word table
@@ -267,14 +267,12 @@ object EventAnalyticsStream {
     * is literally shared, so the streamed and batch word tables cannot
     * drift) with the q113 training schedule as the derived step. One
     * deliberate difference from the BPE mirror: training runs EM rounds,
-    * which is NOT worth repeating when nothing changed, so the model
-    * records the log version it was trained from (a [[Sidecar]] inside
-    * the model's live version — crash-safe the [[graft.gold
-    * .GoldMaintenance]] way: a crash between model write and marker
-    * write reads as stale and retrains, never serves a wrong model) and
-    * an all-replay batch SKIPS retraining entirely — zero version churn
-    * on pure replay, O(batch) otherwise plus the capped-vocab training
-    * loop. Training determinism (UnigramLm's integer micro-unit EM)
+    * which is NOT worth repeating when nothing changed, so every model
+    * commit carries the log version it was trained from as its marker
+    * ([[ParquetTable.applied]]; no marker → retrain, never a wrong
+    * model) and an all-replay batch SKIPS retraining entirely — zero
+    * version churn on pure replay, O(batch) otherwise plus the
+    * capped-vocab training loop. Training determinism (UnigramLm's integer micro-unit EM)
     * makes streamed ≡ batch an EXACT equality, spec-pinned.
     */
   def unigramStatsStream(docs: DataFrame, idCol: String, textCol: String,
@@ -288,38 +286,33 @@ object EventAnalyticsStream {
         val prevV = if (log.exists) Some(log.version) else None
         val hadPieces =
           absorbPieceBatch(batch.toDF(), idCol, textCol, pattern, log)
-        val builtFrom = Sidecar.read(result.path, Nil, UnigramBuiltFrom)
-          .flatMap(_.headOption).flatMap(_.toIntOption)
+        val builtFrom = result.applied.get(BuiltFromKey)
         // retrain ONLY when a log exists at all (a first no-fresh batch
         // has not created it) AND it advanced past the model's vintage
-        // (also covers the crash window: model written, marker lost →
-        // builtFrom reads None → retrain)
-        if (log.exists && !(result.exists && builtFrom.contains(log.version))) {
+        // (a model without a marker reads builtFrom None → retrain)
+        if (log.exists && !builtFrom.contains(log.version)) {
+          val marker = Map(BuiltFromKey -> log.version)
           // a doc-marker-only advance (fresh docs whose texts tokenized
           // to ZERO pieces) leaves the piece rollup unchanged, so the
           // deterministic EM would reproduce the model bit-identically —
-          // skip the wasted training and just re-pin the existing model
-          // to the new log vintage. Only sound when the model was
-          // CURRENT before this batch (builtFrom == prevV); a stale or
-          // crash-window model still takes the retrain path.
-          if (!hadPieces && result.exists && prevV.isDefined &&
-              builtFrom == prevV) {
-            Sidecar.write(java.nio.file.Paths.get(result.currentPath),
-              UnigramBuiltFrom, Seq(log.version.toString))
-          } else {
-          val words = BpeLearn.topVocabPlan(
-            log.read(s).filter(col("piece").isNotNull)
-              .groupBy(col("piece")).agg(sum(col("weight")).as("weight")),
-            wordCap).persist()
-          try {
-            words.count() // EM iterates; never recompute the rollup
-            val model = graft.northstar.UnigramLm.train(words, targetVocab,
-              maxLen, seedSize, emIters)
-            result.overwrite(
-              graft.northstar.UnigramLm.modelToDF(s, model))
-          } finally { words.unpersist(); () }
-          Sidecar.write(java.nio.file.Paths.get(result.currentPath),
-            UnigramBuiltFrom, Seq(log.version.toString))
+          // skip the wasted training and just rewrite the (vocabulary-
+          // sized) model under the new log vintage. Only sound when the
+          // model was CURRENT before this batch (builtFrom == prevV); a
+          // stale or unmarked model still takes the retrain path.
+          if (!hadPieces && prevV.isDefined && builtFrom == prevV)
+            result.overwrite(result.read(s), marker)
+          else {
+            val words = BpeLearn.topVocabPlan(
+              log.read(s).filter(col("piece").isNotNull)
+                .groupBy(col("piece")).agg(sum(col("weight")).as("weight")),
+              wordCap).persist()
+            try {
+              words.count() // EM iterates; never recompute the rollup
+              val model = graft.northstar.UnigramLm.train(words, targetVocab,
+                maxLen, seedSize, emIters)
+              result.overwrite(
+                graft.northstar.UnigramLm.modelToDF(s, model), marker)
+            } finally { words.unpersist(); () }
           }
         }
         log.vacuum(); result.vacuum()

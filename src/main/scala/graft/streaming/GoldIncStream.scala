@@ -30,15 +30,15 @@ import graft.pipeline.Warehouse
   * gold, and the replayed batch then gates to ZERO fresh rows, so a
   * fresh-conditional advance would leave gold stale until the next
   * fresh-bearing batch (the PackStream.recover window). The steady-state
-  * cost of the unconditional heal is pointer reads: each gold table
-  * compares its applied-versions sidecar to the live silver versions and
-  * no-ops when they match.
+  * cost of the unconditional heal is pointer and record reads: each gold
+  * table compares its maintenance marker to the live silver versions
+  * and no-ops when they match.
   *
   * Scale: per trigger this is O(batch) intake + O(changes + affected
   * anchors) maintenance — never a full re-aggregate. A deployment
   * wanting coarser gold freshness moves `advanceAll` to its own timer
-  * and lets several intake triggers accumulate; the applied-version
-  * sidecars make that split safe (each advance folds every version
+  * and lets several intake triggers accumulate; the maintenance
+  * markers make that split safe (each advance folds every version
   * since the last one it applied).
   */
 object GoldIncStream {
@@ -58,7 +58,7 @@ object GoldIncStream {
     * q111's machinery) and the signed-foldable percentile histogram
     * ([[GoldMaintenance.advancePercentile]], q116's) over the silver
     * orders commit stream. All three families share the same
-    * applied-version sidecar discipline, so a replayed trigger
+    * maintenance-marker discipline, so a replayed trigger
     * no-ops with ZERO version churn on every table.
     */
   private def advanceGold(s: org.apache.spark.sql.SparkSession,
@@ -92,7 +92,7 @@ object GoldIncStream {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         // self-heal the appendVersion→advance crash window BEFORE gating:
-        // versions unmoved → sidecar compares only, no jobs
+        // versions unmoved → marker compares only, no jobs
         advanceGold(s, warehouse, extendedMeasures)
         val silver = warehouse.silverByName("orders")
         val bloomPath = java.nio.file.Paths.get(silver.path,
@@ -125,7 +125,7 @@ object GoldIncStream {
     * (a separate job, even a separate cluster) tails the silver orders
     * table through `readStream.format("graft-table")` and advances the
     * gold IVM once per silver commit. Correctness is entirely the
-    * sidecar IVM's ([[advanceGold]] folds every silver version since
+    * marker-driven IVM's ([[advanceGold]] folds every silver version since
     * the last one each gold table applied; a replayed trigger no-ops
     * with zero version churn); the SOURCE supplies cadence and
     * restart-resume: offsets are silver versions, so a restarted
@@ -272,7 +272,7 @@ object GoldIncStream {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val s = batch.sparkSession
         // self-heal the commit→advance crash window first (see
-        // ordersIntakeStream): versions unmoved → sidecar reads only
+        // ordersIntakeStream): versions unmoved → marker reads only
         advanceGold(s, warehouse, extendedMeasures)
         if (applyCdcBatch(s, warehouse, entity, batch.toDF()))
           advanceGold(s, warehouse, extendedMeasures)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.io.{ParquetTable, Sidecar}
+import graft.io.ParquetTable
 import graft.northstar.SeqPack
 
 /** Streaming sequence-packing maintenance — the mirror that closes q98's
@@ -36,34 +36,27 @@ import graft.northstar.SeqPack
   * harmless while the write ordering matters); an all-replay batch
   * touches no bucket and commits no version to either table.
   *
-  * CRASH RECOVERY is self-healing, the GoldMaintenance sidecar pattern:
-  * the packed table records the log version it reflects in a
-  * `_packed_log_version` sidecar inside its live version dir. The crash
-  * window between `log.appendVersion` and `packed.replacePartitions`
-  * previously diverged permanently — on restart the replayed batch
-  * anti-joins to zero fresh docs against the already-committed log, so
-  * the touched buckets were never repacked. Now every trigger FIRST
-  * compares the sidecar to the log's live version and repacks the
-  * buckets touched by any unapplied log versions (via the log's CDF —
-  * the log is insert-only, so the changes are exactly the late docs)
-  * before processing the batch; repacking a bucket is idempotent (it
-  * recomputes from the log slice), so the half-applied and replayed
-  * cases land on the same state as the no-crash run. A crash between
-  * `replacePartitions` and the sidecar write leaves a stale sidecar and
-  * repacks that delta once more — idempotent again.
+  * CRASH RECOVERY is self-healing, the GoldMaintenance marker pattern:
+  * every packed commit carries the log version it reflects as its
+  * maintenance marker ([[ParquetTable.applied]]). A crash between
+  * `log.appendVersion` and the packed commit would otherwise diverge
+  * permanently — on restart the replayed batch anti-joins to zero fresh
+  * docs against the already-committed log, so the touched buckets would
+  * never be repacked. So every trigger FIRST compares the marker to the
+  * log's live version and repacks the buckets touched by any unapplied
+  * log versions (via the log's CDF — the log is insert-only, so the
+  * changes are exactly the late docs) before processing the batch;
+  * repacking a bucket is idempotent (it recomputes from the log slice),
+  * so the half-applied and replayed cases land on the same state as the
+  * no-crash run.
   *
   * StreamingSpec proves stream ≡ batch repack across out-of-order and
   * replayed batches, plus the crash-window laws.
   */
 object PackStream {
 
-  /** Sidecar (inside the PACKED table's live version dir) holding the log
-    * version the packed table reflects. `replacePartitions` hard-links
-    * the previous version's sidecar into each new version; the
-    * tmp+atomic-move rewrite REPLACES that link (never writes through the
-    * shared inode), so history stays intact.
-    */
-  private val AppliedMarker = "_packed_log_version"
+  /** The marker key holding the log version the packed table reflects. */
+  private val LogKey = "log"
 
   private def bloomFile(log: ParquetTable) =
     java.nio.file.Paths.get(log.path, ReplayGate.BloomFile)
@@ -123,52 +116,49 @@ object PackStream {
       }
       .start()
 
-  /** Repack `touched` buckets from the (partition-pruned) log slice,
-    * commit via replacePartitions, and record the log version the packed
-    * table now reflects. Idempotent: recomputes from the log, so running
-    * it twice for the same versions lands on the same bytes.
+  /** Repack `touched` buckets from the (partition-pruned) log slice and
+    * commit them via replacePartitions, marked with the log version the
+    * packed table now reflects. Idempotent: recomputes from the log, so
+    * running it twice for the same versions lands on the same bytes.
+    * `touched` is non-empty on every path: the log commits only
+    * non-empty batches, and every logged doc has a bucket.
     */
   private def repackBuckets(s: SparkSession, log: ParquetTable,
       packed: ParquetTable, touched: Seq[Long], budget: Int,
       bucketSize: Int): Unit = {
-    if (touched.nonEmpty) {
-      // partition-pruned: only the touched buckets are re-read
-      val slice = log.read(s)
-        .filter(col("bucket").isin(touched.map(Long.box): _*))
-      val repacked = SeqPack
-        .packGreedy(slice, "doc_id", "text", budget, bucketSize)
-        .toDF()
-        .select(col("doc_id"), col("seq"), col("n_tokens"),
-          col("bucket")) // partition column last, Spark convention
-      if (packed.exists) packed.replacePartitions(repacked)
-      else packed.overwrite(repacked)
-    }
-    if (packed.exists)
-      Sidecar.write(java.nio.file.Paths.get(packed.currentPath),
-        AppliedMarker, Seq(log.version.toString))
+    // partition-pruned: only the touched buckets are re-read
+    val slice = log.read(s)
+      .filter(col("bucket").isin(touched.map(Long.box): _*))
+    val repacked = SeqPack
+      .packGreedy(slice, "doc_id", "text", budget, bucketSize)
+      .toDF()
+      .select(col("doc_id"), col("seq"), col("n_tokens"),
+        col("bucket")) // partition column last, Spark convention
+    val marker = Map(LogKey -> log.version)
+    if (packed.exists) packed.replacePartitions(repacked, marker)
+    else packed.overwrite(repacked, marker)
   }
 
   /** The log version the packed table reflects, if recorded. */
   private[graft] def appliedLogVersion(packed: ParquetTable): Option[Int] =
-    Sidecar.read(packed.path, Nil, AppliedMarker)
-      .flatMap(_.headOption).flatMap(_.toIntOption)
+    packed.applied.get(LogKey)
 
   /** Bring `packed` current with `log` — the self-healing pass run at
     * the top of every trigger (and callable standalone after a crash).
-    * No log → nothing to heal; sidecar == live log version → no-op (the
-    * steady-state cost is two pointer reads). Behind → repack exactly
-    * the buckets the unapplied log versions touched (insert-only log, so
-    * its CDF between the two versions IS the late docs). A packed table
-    * or sidecar that does not exist yet (first-trigger crash windows,
-    * pre-upgrade tables) falls back to repacking every bucket in the log
-    * — the one full repack, after which the sidecar exists.
+    * No log → nothing to heal; marker == live log version → no-op (the
+    * steady-state cost is a pointer read and a record read). Behind →
+    * repack exactly the buckets the unapplied log versions touched
+    * (insert-only log, so its CDF between the two versions IS the late
+    * docs). A packed table or marker that does not exist yet
+    * (first-trigger crash windows, a lost log record) falls back to
+    * repacking every bucket in the log — the one full repack, after
+    * which the marker exists.
     */
   private[graft] def recover(s: SparkSession, log: ParquetTable,
       packed: ParquetTable, budget: Int, bucketSize: Int): Unit = {
     if (!log.exists) return
     val logV = log.version
-    val applied = if (packed.exists) appliedLogVersion(packed) else None
-    applied match {
+    appliedLogVersion(packed) match {
       case Some(v) if v == logV => ()
       case Some(v) =>
         val touched = log.changesBetween(s, v, logV)

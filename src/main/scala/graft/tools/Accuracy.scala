@@ -1331,7 +1331,8 @@ object Accuracy {
       .split(",").toSeq.filter(_.nonEmpty)
     val spark = SparkSession.builder()
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER",
+        s"local[${graft.HarnessCpus()}]"))
       .appName("graft-accuracy")
       .config("spark.sql.shuffle.partitions", "32")
       // events carries TIMESTAMP(NANOS) parquet in some vintages and the

@@ -15,8 +15,8 @@ import graft.pipeline.Warehouse
   * the incrementally maintained gold tables equal a FULL batch rebuild
   * (GoldBuilds) run over the same silver state — including the derivable
   * `avg_delivery_time` (maintained as sum/count components). Plus the
-  * replay no-op and crash-window (missing sidecar → safe full rebuild)
-  * laws.
+  * replay no-op (nothing written), lost-marker (missing log record →
+  * safe full rebuild), stray-commit and restore laws.
   */
 class GoldIncrementalSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -83,7 +83,7 @@ class GoldIncrementalSpec extends AnyFunSuite {
 
   test("incremental maintenance of the five reference gold tables " +
       "equals the batch rebuild across an insert/update/delete commit " +
-      "mix, absorbs replays, and survives the crash window") {
+      "mix, absorbs replays, and survives a lost marker") {
     val root = java.nio.file.Files.createTempDirectory("graft_goldinc")
     val wh = new Warehouse(s"$root/inc")
     val whB = new Warehouse(s"$root/batch")
@@ -146,16 +146,123 @@ class GoldIncrementalSpec extends AnyFunSuite {
     new GoldBuilds(spark, whB).buildAll()
     assertMatchesBatch(wh, whB)
 
-    // ---- crash window: gold overwritten, sidecar write lost ----
-    // the live gold version has no marker → next advance must fall back
-    // to the safe full rebuild (never double-apply), then re-record
+    // ---- lost marker: the live gold version's log record is gone ----
+    // data and marker publish in one commit, so there is no window
+    // between them; a missing (torn, retired) record reads as no marker
+    // → the next advance is the safe full rebuild (never a double-
+    // applied delta), and its commit carries the marker again
     val g = wh.gold("customer_breakdown")
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(g.currentPath, "_cdf_applied_sources"))
-    assert(inc.appliedVersions(g).isEmpty)
+    java.nio.file.Files.delete(java.nio.file.Paths.get(g.path, "_log",
+      f"r_${g.version}%05d.txt"))
+    assert(g.applied.isEmpty)
     inc.customerBreakdown()
-    assert(inc.appliedVersions(g).nonEmpty, "sidecar must be restored")
+    assert(g.applied == Map("customers" ->
+      wh.silverByName("customers").version), "the marker must be back")
     assertMatchesBatch(wh, whB)
+  }
+
+  /** Every file under `t`'s version dirs, with its size and mtime. */
+  private def versionFiles(t: graft.io.ParquetTable)
+      : Map[String, (Long, java.nio.file.attribute.FileTime)] = {
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.Files
+    val root = java.nio.file.Paths.get(t.path)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        root.relativize(p).getName(0).toString.startsWith("v_"))
+      .map(p => root.relativize(p).toString ->
+        (Files.size(p), Files.getLastModifiedTime(p)))
+      .toMap
+    finally walk.close()
+  }
+
+  test("a replayed no-op advance writes nothing: every file of every " +
+      "gold version dir keeps its name, size and mtime (advanceAll, " +
+      "advance, advancePercentile)") {
+    import graft.gold.GoldMaintenance
+    import graft.io.ParquetTable
+    val root = java.nio.file.Files.createTempDirectory("graft_goldseal")
+    val wh = new Warehouse(s"$root/wh")
+    writeSilver(wh,
+      customersDf((1L, "affiliate", "regular", "2023-05-01"),
+        (2L, "individual", "VIP", "2023-06-01")),
+      ordersDf((100L, 1L, 10L, "2024-01-10", Some("2024-01-15")),
+        (101L, 2L, 11L, "2024-02-10", None)),
+      addressesDf((10L, "berlin"), (11L, "paris")))
+    val inc = new GoldIncremental(spark, wh)
+    val src = new ParquetTable(s"$root/src")
+    val sumGold = new ParquetTable(s"$root/sum")
+    val pctGold = new ParquetTable(s"$root/pct")
+    src.overwrite(Seq((1L, "a", 10L), (2L, "a", 30L), (3L, "b", 5L))
+      .toDF("id", "grp", "cents"))
+    def advanceEverything(): Unit = {
+      inc.advanceAll()
+      GoldMaintenance.advance(spark, src, sumGold, Seq("grp"), col("cents"))
+      GoldMaintenance.advancePercentile(spark, src, pctGold, Seq("grp"),
+        col("cents"), Seq(("p50", 50, 100)))
+    }
+    advanceEverything()
+    val golds = GoldNames.map(wh.gold) ++ Seq(sumGold, pctGold)
+    val before = golds.map(versionFiles)
+    Thread.sleep(50) // any rewrite now gets a later mtime
+    advanceEverything()
+    golds.zip(before).foreach { case (g, b) =>
+      assert(versionFiles(g) == b,
+        s"${g.path}: a replayed advance must not write into a version dir")
+    }
+  }
+
+  test("a stray commit carries no marker: appendVersion onto a " +
+      "maintained gold table, then advance, equals the batch rebuild") {
+    import graft.gold.GoldMaintenance
+    import graft.io.ParquetTable
+    val tmp = java.nio.file.Files.createTempDirectory("graft_goldstray")
+    val src = new ParquetTable(s"$tmp/src")
+    val gold = new ParquetTable(s"$tmp/gold")
+    val v1 = Seq((1L, "a", 10L), (2L, "b", 20L)).toDF("id", "grp", "cents")
+    src.overwrite(v1)
+    GoldMaintenance.advance(spark, src, gold, Seq("grp"), col("cents"))
+    gold.appendVersion(Seq(("zz", 1L, 1L)).toDF("grp", "n_rows",
+      "value_sum"))
+    assert(gold.applied.isEmpty,
+      "an append must not label its data with the old marker")
+    GoldMaintenance.advance(spark, src, gold, Seq("grp"), col("cents"))
+    assert(TestSpark.rows(gold.read(spark)) == TestSpark.rows(
+      GoldMaintenance.aggregate(v1, Seq("grp"), col("cents"))),
+      "advance after a stray append must land on the rebuild")
+    assert(GoldMaintenance.appliedVersion(gold).contains(1))
+  }
+
+  test("restore and clone carry the source version's marker; the next " +
+      "advance after a gold restore equals the rebuild") {
+    import graft.gold.GoldMaintenance
+    import graft.io.{ParquetTable, VersionLog}
+    val tmp = java.nio.file.Files.createTempDirectory("graft_goldrestore")
+    val src = new ParquetTable(s"$tmp/src")
+    val gold = new ParquetTable(s"$tmp/gold")
+    def df(rows: (Long, String, Long)*) = rows.toSeq.toDF("id", "grp", "cents")
+    src.overwrite(df((1L, "a", 10L), (2L, "b", 20L)))
+    GoldMaintenance.advance(spark, src, gold, Seq("grp"), col("cents"))
+    val v2 = df((1L, "a", 10L), (3L, "c", 7L))
+    src.overwrite(v2)
+    GoldMaintenance.advance(spark, src, gold, Seq("grp"), col("cents"))
+    gold.restoreVersion(1)
+    val v1Marker = VersionLog.recordOf(gold.path, 1).map(_.applied)
+    assert(v1Marker.contains(Map("source" -> 1)))
+    assert(gold.applied == v1Marker.get,
+      "the restore commit must carry the restored version's marker")
+    val hist = gold.history(spark).collect()
+      .map(r => r.getInt(0) -> r.getMap[String, Int](6).toMap).toMap
+    assert(hist(gold.version) == Map("source" -> 1),
+      "DESCRIBE HISTORY must show the marker")
+    val clone = gold.cloneTo(s"$tmp/clone")
+    assert(clone.applied == gold.applied, "a clone carries the marker too")
+    GoldMaintenance.advance(spark, src, gold, Seq("grp"), col("cents"))
+    assert(TestSpark.rows(gold.read(spark)) == TestSpark.rows(
+      GoldMaintenance.aggregate(v2, Seq("grp"), col("cents"))),
+      "the fold from the restored marker must land on the rebuild")
+    assert(GoldMaintenance.appliedVersion(gold).contains(2))
   }
 
   test("write-side change feeds drive the five-table maintenance to the " +

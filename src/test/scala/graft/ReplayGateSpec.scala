@@ -224,7 +224,7 @@ class ReplayGateSpec extends AnyFunSuite {
         (i, Seq.fill(1 + (i * 7 % 23).toInt)("w").mkString(" "),
           i / 16))
       .toDF("doc_id", "text", "bucket")
-    // healthy trigger 1 (simulated): log + pack + sidecar for bucket 0
+    // healthy trigger 1 (simulated): log + marked pack for bucket 0
     log.overwrite(docsDf(0L until 8L))
     PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
     assert(PackStream.appliedLogVersion(packed).contains(log.version))
@@ -234,7 +234,7 @@ class ReplayGateSpec extends AnyFunSuite {
     // repack — exactly the state Structured Streaming replays into
     log.appendVersion(docsDf(Seq(8L, 9L, 33L)))
     assert(PackStream.appliedLogVersion(packed).contains(1),
-      "sidecar still names the pre-crash log version")
+      "the marker still names the pre-crash log version")
     // restart: recovery runs BEFORE the replayed batch and must bring
     // packed to exactly the batch repack of the full log
     PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
@@ -253,11 +253,12 @@ class ReplayGateSpec extends AnyFunSuite {
     val v = packed.version
     PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
     assert(packed.version == v, "current tables must not be rewritten")
-    // and a recovery re-run after a crash BETWEEN replacePartitions and
-    // the sidecar write (stale sidecar, fresh pack) repacks once more —
-    // idempotent on content
-    graft.io.Sidecar.write(Paths.get(packed.currentPath),
-      "_packed_log_version", Seq("1"))
+    // the marker rides in the packed commit's record, so a repack and
+    // its marker cannot come apart; a LOST record (no marker) falls back
+    // to the full repack — idempotent on content, marker back
+    Files.delete(Paths.get(packed.path, "_log",
+      f"r_${packed.version}%05d.txt"))
+    assert(PackStream.appliedLogVersion(packed).isEmpty)
     PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
     val regot = packed.read(spark)
       .select("doc_id", "bucket", "seq", "n_tokens").collect()

@@ -854,7 +854,7 @@ class TablesSpec extends AnyFunSuite {
     assert(got == ref,
       "gold maintained across a restore must equal the rebuild of the " +
         "restored state")
-    assert(GoldMaintenance.appliedVersion(gold).contains(3),
+    assert(gold.applied == Map("source" -> 3),
       "the restore commit must be folded as a normal version")
   }
 
@@ -879,7 +879,7 @@ class TablesSpec extends AnyFunSuite {
       assert(t.versionAtTimestamp(1999L) == 1)
       assert(t.versionAtTimestamp(2000L) == 2)
       // monotonic adjustment: v3 must stamp AFTER v2 despite clock=1500
-      assert(VersionLog.timestampOf(s"$dir/t", 3).contains(2001L),
+      assert(VersionLog.recordOf(s"$dir/t", 3).flatMap(_.ts).contains(2001L),
         "a backwards host clock must adjust to prev+1 (Delta semantics)")
       assert(t.versionAtTimestamp(2001L) == 3)
       // a future timestamp resolves to the live version
@@ -902,7 +902,7 @@ class TablesSpec extends AnyFunSuite {
       t.restoreToTimestamp(2000L) // restore v2's state, committed as v4
       assert(t.version == 4)
       assert(t.read(spark).collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-      assert(VersionLog.timestampOf(s"$dir/t", 4).contains(3000L))
+      assert(VersionLog.recordOf(s"$dir/t", 4).flatMap(_.ts).contains(3000L))
       assert(t.versionAtTimestamp(3000L) == 4)
 
       // timestamp-addressed CDF: changesSince(ts) ≡ changesBetween of

@@ -262,6 +262,13 @@ class UnigramSpec extends AnyFunSuite {
       assert(result.version === rv, "replay of a marker-only doc must " +
         "not rewrite the model")
       in.addData(real: _*); q.processAllAvailable()
+      // a later doc-marker-only batch skips EM: the current model is
+      // rewritten unchanged under a marker naming the new log version
+      val (rv2, model2) = (result.version, result.read(spark).collect().toSet)
+      in.addData((4L, "")); q.processAllAvailable()
+      assert(result.version === rv2 + 1 &&
+        result.read(spark).collect().toSet === model2)
+      assert(result.applied === Map("log" -> log.version))
     } finally q.stop()
     val words = graft.northstar.BpeLearn.topVocabPlan(
       graft.northstar.BpeLearn.pieceCounts(

@@ -71,6 +71,39 @@ class VersionLogSpec extends AnyFunSuite {
       s"string stats captured: $st")
   }
 
+  test("maintenance markers round-trip through a loose record, a " +
+      "checkpoint and record compaction; a record without one renders " +
+      "exactly the pre-marker lines") {
+    val p = Files.createTempDirectory("graft_vlog").toString + "/mk"
+    // every third commit carries no marker; keys need URL-encoding
+    def marker(v: Int) =
+      if (v % 3 == 0) Map.empty[String, Int]
+      else Map("orders" -> v, "a b=c\td" -> v * 10)
+    val n = 2 * VersionLog.CheckpointEvery + 1
+    (1 to n).foreach { v =>
+      VersionLog.append(p, VersionLog.Record(v, "overwrite",
+        Seq(VersionLog.FileEntry(s"part-$v.parquet", Map.empty,
+          Some(v.toLong))), Nil, Nil, renamed = false,
+        ts = Some(1000L + v), applied = marker(v)))
+    }
+    def loose(v: Int) = Paths.get(p, "_log", f"r_$v%05d.txt")
+    // the first checkpoint's interval was compacted away: its markers
+    // now resolve from the checkpoint, the rest from loose records
+    assert(!Files.exists(loose(1)) && Files.exists(loose(n)))
+    (1 to n).foreach { v =>
+      assert(VersionLog.recordOf(p, v).map(_.applied).contains(marker(v)),
+        s"v$v's marker must round-trip")
+    }
+    assert(Files.readString(loose(n)) == Seq(s"v=$n", "kind=overwrite",
+      "renamed=0", "dropflat=0", s"ts=${1000 + n}",
+      s"addz=$n\tpart-$n.parquet").mkString("\n"),
+      "a record without a marker must render exactly as before markers")
+    assert(Files.readString(loose(n - 1)).split("\n").toSeq
+      .filter(_.startsWith("applied=")) ==
+      Seq(s"applied=a+b%3Dc%09d\t${(n - 1) * 10}",
+        s"applied=orders\t${n - 1}"))
+  }
+
   test("torn-log safety: a corrupted record file degrades resolution " +
       "to None while changesBetween stays exact off the walk fallback") {
     import org.apache.spark.sql.functions.lit
@@ -206,12 +239,12 @@ class VersionLogSpec extends AnyFunSuite {
       // version-addressed travel instead of guessing
       val tsOld = intercept[IllegalArgumentException] {
         t.versionAtTimestamp(
-          VersionLog.timestampOf(p, target).get - 1000000L)
+          VersionLog.recordOf(p, target).flatMap(_.ts).get - 1000000L)
       }
       assert(tsOld.getMessage.contains("version"))
       // a timestamp within the retained stamped range still resolves
       assert(t.versionAtTimestamp(
-        VersionLog.timestampOf(p, target).get) == target)
+        VersionLog.recordOf(p, target).flatMap(_.ts).get) == target)
     } finally {
       prevRetain match {
         case Some(v) => sys.props("graft.log.retainCommits") = v
