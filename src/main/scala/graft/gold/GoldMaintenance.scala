@@ -52,9 +52,7 @@ object GoldMaintenance {
     // resolved AQE flag, not a raw-string compare ("TRUE" parses too)
     if (df.sparkSession
         .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.conf.adaptiveExecutionEnabled &&
-      !df.sparkSession.conf.getOption("graft.write.rebalance")
-        .contains("off")) df.hint("rebalance")
+        .sessionState.conf.adaptiveExecutionEnabled) df.hint("rebalance")
     else df
 
   /** The maintained aggregate: per-`keys` row count and `value` sum.

@@ -112,10 +112,10 @@ object Catalog {
       // leaf dir; registering those partitions explicitly produces the
       // identical catalog state (one partition per leaf, table storage,
       // leaf location) for O(cached sidecar reads). Falls back to the
-      // listing whenever the log cannot resolve or any live file does
-      // not parse as hive layout — an UNREGISTERED partition's rows are
-      // invisible to SQL reads, so partial registration is never an
-      // option (CatalogSqlSpec pins explicit ≡ recovered).
+      // listing whenever any live file does not parse as the handle's
+      // hive layout — an UNREGISTERED partition's rows are invisible to
+      // SQL reads, so partial registration is never an option
+      // (CatalogSqlSpec pins explicit ≡ recovered).
       logPartitionSpecs(table) match {
         case Some(specs) =>
           org.apache.spark.sql.GraftCatalogPartitions.create(spark,
@@ -129,7 +129,7 @@ object Catalog {
     // resolves through a lazy CatalogFileIndex and would otherwise report
     // defaultSizeInBytes (Long.MaxValue) as its plan size — garbage into
     // every pre-AQE join/broadcast decision. The live version's exact
-    // data footprint is one directory walk at registration time.
+    // data footprint is the sum of its logged file sizes.
     org.apache.spark.sql.GraftCatalogStats.set(spark, database, name,
       liveDataBytes(table))
     // make the registered name a SQL MERGE INTO target (sessions built
@@ -140,10 +140,10 @@ object Catalog {
 
   /** The live version's leaf-partition specs + locations, resolved from
     * the commit log ([[VersionLog]] via the table's cached resolution) —
-    * zero directory listings. None (→ recoverPartitions fallback) when
-    * the log cannot resolve the live file set, the handle declares no
-    * partition columns, or ANY live data file's rel path does not parse
-    * as the declared hive dir chain (flat-fallback files, foreign
+    * zero directory listings; a log that cannot resolve the live version
+    * throws. None (→ recoverPartitions fallback) when the handle declares
+    * no partition columns, or ANY live data file's rel path does not
+    * parse as the declared hive dir chain (flat-fallback files, foreign
     * layouts): the explicit form must cover every live leaf or rows go
     * invisible to SQL reads.
     */
@@ -151,68 +151,46 @@ object Catalog {
       Seq[(Map[String, String], java.net.URI)]] = {
     val pCols = table.partitionColumns
     if (pCols.isEmpty) return None
-    ParquetTable.resolveFilesCached(table.path, table.version).flatMap {
-      files =>
-        val depth = pCols.size
-        val specs = scala.collection.mutable.LinkedHashMap[
-          Vector[String], Map[String, String]]()
-        files.foreach { f =>
-          // split on '/' only: the census writes rel paths with '/' on
-          // every platform Spark's hive layout uses
-          val segs = f.rel.split('/')
-          if (segs.length <= depth) return None // flat/short: not hive
-          val kvs = (0 until depth).map { i =>
-            val seg = segs(i)
-            val eq = seg.indexOf('=')
-            if (eq <= 0) return None
-            val (k, v) = (seg.substring(0, eq), seg.substring(eq + 1))
-            if (k != pCols(i)) return None
-            k -> org.apache.spark.sql.GraftCatalogPartitions
-              .unescapePathName(v)
-          }
-          val dirKey = segs.take(depth).toVector
-          if (!specs.contains(dirKey)) specs(dirKey) = kvs.toMap
-        }
-        if (specs.isEmpty) None
-        else Some(specs.toSeq.map { case (dirSegs, spec) =>
-          // nio toUri appends a trailing '/' to directory URIs; the scan's
-          // file→partition attribution compares paths EXACTLY, so the
-          // slash makes every partition's files invisible — strip it
-          val u = java.nio.file.Paths
-            .get(table.currentPath, dirSegs: _*).toUri
-          spec -> java.net.URI.create(u.toString.stripSuffix("/"))
-        })
+    val files = table.liveFiles
+    val depth = pCols.size
+    val specs = scala.collection.mutable.LinkedHashMap[
+      Vector[String], Map[String, String]]()
+    files.foreach { f =>
+      // split on '/' only: the census writes rel paths with '/' on
+      // every platform Spark's hive layout uses
+      val segs = f.rel.split('/')
+      if (segs.length <= depth) return None // flat/short: not hive
+      val kvs = (0 until depth).map { i =>
+        val seg = segs(i)
+        val eq = seg.indexOf('=')
+        if (eq <= 0) return None
+        val (k, v) = (seg.substring(0, eq), seg.substring(eq + 1))
+        if (k != pCols(i)) return None
+        k -> org.apache.spark.sql.GraftCatalogPartitions
+          .unescapePathName(v)
+      }
+      val dirKey = segs.take(depth).toVector
+      if (!specs.contains(dirKey)) specs(dirKey) = kvs.toMap
     }
+    if (specs.isEmpty) None
+    else Some(specs.toSeq.map { case (dirSegs, spec) =>
+      // nio toUri appends a trailing '/' to directory URIs; the scan's
+      // file→partition attribution compares paths EXACTLY, so the
+      // slash makes every partition's files invisible — strip it
+      val u = java.nio.file.Paths
+        .get(table.currentPath, dirSegs: _*).toUri
+      spec -> java.net.URI.create(u.toString.stripSuffix("/"))
+    })
   }
 
   /** Exact data-file bytes of the live version (the number fed to
-    * [[org.apache.spark.sql.GraftCatalogStats]]). Served from the
-    * commit log when every resolved live file carries a recorded size
-    * (the census captures `Files.size` at commit time) — cached sidecar
-    * reads, zero filesystem calls, the same rationale as the explicit
-    * partition registration above. Falls back to one `Files.walk` with
-    * per-file size attributes for unresolvable logs or pre-size
-    * records; the two agree by construction (both read the immutable
-    * file's byte size — hard-linked files share the inode).
+    * [[org.apache.spark.sql.GraftCatalogStats]]): the sizes the commit
+    * census recorded — cached sidecar reads, zero filesystem calls
+    * (hard-linked files share the inode, so a linked entry's size is
+    * its original census's).
     */
-  private def liveDataBytes(table: ParquetTable): Long = {
-    ParquetTable.resolveFilesCached(table.path, table.version)
-      .foreach { files =>
-        val sizes = files.flatMap(_.size)
-        if (sizes.length == files.length) return sizes.sum
-      }
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(table.currentPath)
-    val walk = java.nio.file.Files.walk(root)
-    try walk.iterator().asScala.foldLeft(0L) { (acc, p) =>
-      val rel = root.relativize(p).toString
-      if (java.nio.file.Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet") &&
-          !rel.startsWith("_"))
-        acc + java.nio.file.Files.size(p)
-      else acc
-    } finally walk.close()
-  }
+  private def liveDataBytes(table: ParquetTable): Long =
+    table.liveFiles.map(_.size).sum
 
   /** `VERSION AS OF` for the SQL surface: register a session temp view
     * of a RETAINED version, so `spark.sql("SELECT … FROM <view>")`

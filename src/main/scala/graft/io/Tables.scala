@@ -124,15 +124,17 @@ final class ParquetTable(val path: String,
   /** Per-version committed-schema sidecar (see [[storedSchema]]). */
   private val SchemaFile = "_schema.json"
 
-  /** In-flight reservation marker (see [[reserveNextDir]]/[[vacuum]]). */
-  private val StagingMarker = "_staging"
+  /** Name prefix of a commit's private staging dir (see [[commit]]);
+    * [[vacuum]] ages out one a killed writer left behind.
+    */
+  private val StagePrefix = "_stage_"
 
   /** Per-version WRITE-SIDE change feed (see [[overwriteWithChanges]]):
     * a parquet dir inside the version holding the commit's row-level
     * multiset delta vs the previous version, `_change_type`
     * insert/delete. Underscore-prefixed, so table scans never see it
     * (Spark's hidden-path filter), and it lives and dies with its
-    * version (vacuum, crash-cleanup of staged dirs).
+    * version (vacuum, a failed commit's cleanup).
     */
   private val ChangesDir = "_changes"
 
@@ -184,17 +186,15 @@ final class ParquetTable(val path: String,
     }
 
   /** S3: read the live version — with PLANNER-AUTOMATIC data skipping
-    * when the commit log can serve it (Delta's default-read design):
-    * the returned DataFrame's scan hands whatever filters Catalyst
-    * pushes down to the commit-metadata stats at PLANNING time
-    * ([[StatsPruning]] → [[ColumnBound.survives]]), so files provably
-    * disjoint from the predicate never become splits — zero footer
-    * opens, zero extra scan work, any `.filter` shape, no caller
-    * opt-in. Falls back to the plain directory read when the log cannot
-    * resolve the live file set, no file carries stats, or the table
-    * predates schema sidecars — skipping is an optimization, never a
-    * correctness dependency (`graft.read.skipping=off` forces the
-    * fallback; specs pin pruned ≡ plain).
+    * (Delta's default-read design): the returned DataFrame's scan hands
+    * whatever filters Catalyst pushes down to the commit-metadata stats
+    * at PLANNING time ([[StatsPruning]] → [[ColumnBound.survives]]), so
+    * files provably disjoint from the predicate never become splits —
+    * zero footer opens, zero extra scan work, any `.filter` shape, no
+    * caller opt-in. The plain directory read serves tables whose files
+    * carry no stats; skipping is an optimization, never a correctness
+    * dependency (`graft.read.skipping=off` forces the plain read; specs
+    * pin pruned ≡ plain).
     */
   def read(spark: SparkSession): DataFrame = {
     // pin the pointer ONCE — version dir and log resolution must name
@@ -204,8 +204,8 @@ final class ParquetTable(val path: String,
     val verDir = s"$path/$verName"
     if (sys.props.get("graft.read.skipping").contains("off"))
       return readDir(spark, verDir)
-    (storedSchema(Paths.get(verDir)),
-        ParquetTable.statsPrunerFor(verDir)) match {
+    (storedSchema(Paths.get(verDir)), ParquetTable.prunerOver(
+        Paths.get(verDir), liveFiles(verName))) match {
       case (Some(st), Some(pruner)) =>
         org.apache.spark.sql.GraftScanBridge
           .statsPrunedParquet(spark, verDir, st, pruner)
@@ -236,9 +236,9 @@ final class ParquetTable(val path: String,
     overwrite(if (exists) merge(read(spark), updates) else updates)
 
   /** Full rewrite as a new version + atomic pointer swap. Concurrent
-    * writers each stage into their own reserved version dir; the final
-    * swap is last-writer-wins — use [[overwriteIf]] when a stale commit
-    * must FAIL instead of clobbering. `applied`: the commit's marker.
+    * writers each stage into their own staging dir; the last to commit
+    * wins — use [[overwriteIf]] when a stale commit must FAIL instead of
+    * clobbering. `applied`: the commit's marker.
     */
   def overwrite(df: DataFrame,
       applied: Map[String, Int] = Map.empty): ParquetTable =
@@ -248,7 +248,7 @@ final class ParquetTable(val path: String,
     * shape on a plain filesystem. The caller reads [[version]] (0 = table
     * absent), computes, and commits conditionally: if another writer
     * committed in between, this throws `ConcurrentModificationException`
-    * (fail-fast at reserve time, re-checked under the lock at swap time;
+    * (fail-fast before staging, re-checked under the lock at commit;
     * any staged dir is cleaned) instead of silently overwriting the other
     * writer's committed state — the caller re-reads and retries, the
     * standard OCC loop. Mutual exclusion for the commit window is a
@@ -296,62 +296,85 @@ final class ParquetTable(val path: String,
       s"optimistic commit failed for $path: expected version $expected, " +
         s"found $actual — re-read and retry")
 
-  /** Reserve the next version dir STRICTLY above every existing dir (not
-    * just the pointer — a concurrent writer may have reserved without
-    * committing yet), creating it so no two writers stage into one dir.
-    */
-  private def reserveNextDir(): String = {
-    val n = FsUtil.listDir(Paths.get(path))
-      .map(_.getFileName.toString).filter(_.startsWith("v_"))
-      .map(_.drop(2).toInt).maxOption.getOrElse(0) + 1
-    val name = f"v_$n%05d"
-    Files.createDirectory(Paths.get(path, name))
-    // staging marker: vacuum must never collect an IN-FLIGHT reservation.
-    // "reserved numbers exceed the live version" is not an invariant once
-    // a LATER reservation commits first (live passes the in-flight
-    // number) — the marker, removed under the commit lock just before the
-    // pointer swap, is what actually distinguishes staging from
-    // superseded. A hard-killed writer's marked orphan survives vacuum
-    // (safe-by-default); the in-process failure path still deletes it.
-    Files.writeString(Paths.get(path, name, StagingMarker), "")
-    name
-  }
-
   /** The one commit pipeline: every commit kind — overwrite (plain,
     * conditional, feed-carrying), link-union append, partition replace,
     * restore and clone — runs these phases, each in one place:
-    *   1. under the commit lock: the optimistic stale check (when
-    *      `expected` is set), then [[reserveNextDir]];
-    *   2. outside the lock: `stage(next, base)` builds the reserved dir
-    *      (write, feed, census, links; `base` is the version live at
-    *      reservation) and returns what the log record carries;
-    *   3. under the lock again: the stale re-check, [[swapPointer]] and
-    *      [[logCommit]].
-    * Any failure deletes the staged dir: the pointer still names the old
-    * version, so this removes only our own staging.
+    *   1. outside the lock: `stage(dir, base)` builds the private staging
+    *      dir `dir` (`_stage_<uuid>`: write, feed, census, links; `base`
+    *      is the version live when staging began) and returns what the
+    *      log record carries;
+    *   2. under the commit lock: roll back a killed commit's residue
+    *      above the live version ([[rollBackAbove]]), the stale check
+    *      (when `expected` is set), then number the version n = live + 1,
+    *      rename the staged dir to `v_n`, write its log record and swap
+    *      the pointer — the commit point. The record precedes the
+    *      pointer, so version numbers are dense and every version up to
+    *      the live one has its record;
+    *   3. after the lock: the log's checkpoint cadence (best-effort).
+    * Any failure before the swap removes the staged dir, or `v_n` and
+    * its record: the pointer still names the old version.
     */
   private def commit(kind: String, expected: Option[Int])(
       stage: (String, Int) => ParquetTable.Staged): ParquetTable = {
-    def checkStale(): Unit =
-      expected.foreach(e => if (versionNum != e) throw stale(e, versionNum))
-    val (next, base) = ParquetTable.withCommitLock(path) {
-      checkStale()
-      (reserveNextDir(), versionNum)
-    }
-    try {
-      val staged = stage(next, base)
-      ParquetTable.withCommitLock(path) {
-        checkStale()
-        swapPointer(next)
-        logCommit(next, kind, staged)
+    def checkStale(live: Int): Unit =
+      expected.foreach(e => if (live != e) throw stale(e, live))
+    val base = versionNum
+    checkStale(base) // fail fast, before any I/O
+    val dir = StagePrefix + java.util.UUID.randomUUID()
+    val staging = Paths.get(path, dir)
+    val n =
+      try {
+        Files.createDirectories(staging)
+        val staged = stage(dir, base)
+        ParquetTable.withCommitLock(path) {
+          val live = versionNum
+          rollBackAbove(live)
+          checkStale(live)
+          val next = f"v_${live + 1}%05d"
+          Files.move(staging, Paths.get(path, next),
+            StandardCopyOption.ATOMIC_MOVE)
+          try {
+            VersionLog.append(path, VersionLog.Record(live + 1, kind,
+              staged.adds, staged.feed, staged.removedPrefixes,
+              // partitioned append/replace link walks skip the base's
+              // root-level flat-fallback parquet — resolution must too
+              dropRootFlat = kind != "overwrite" && partitionColumns.nonEmpty,
+              applied = staged.applied))
+            swapPointer(next)
+          } catch {
+            case t: Throwable =>
+              try rollBackAbove(live)
+              catch { case e: Exception => t.addSuppressed(e) }
+              throw t
+          }
+          live + 1
+        }
+      } catch {
+        case t: Throwable =>
+          try FsUtil.deleteRecursively(staging)
+          catch { case _: Exception => () }
+          throw t
       }
-    } catch {
-      case t: Throwable =>
-        try FsUtil.deleteRecursively(Paths.get(path, next))
-        catch { case _: Exception => () }
-        throw t
-    }
+    VersionLog.maintain(path, n)
     this
+  }
+
+  /** Delete what a commit killed between its rename and its pointer swap
+    * left above the live version: the `v_k` dir and its log record and
+    * checkpoint. Numbers are dense, so the residue is contiguous from
+    * live + 1. Runs under the commit lock, where nothing above live is
+    * in flight.
+    */
+  private def rollBackAbove(live: Int): Unit = {
+    var k = live + 1
+    var found = true
+    while (found) {
+      val dir = Paths.get(path, f"v_$k%05d")
+      val hadDir = Files.exists(dir)
+      FsUtil.deleteRecursively(dir)
+      found = VersionLog.discard(path, k) || hadDir
+      k += 1
+    }
   }
 
   private def commitNew(df: DataFrame, expected: Option[Int],
@@ -360,27 +383,26 @@ final class ParquetTable(val path: String,
     // validate the declared feed's shape BEFORE any I/O (appendVersion's
     // fail-in-milliseconds discipline)
     changes.foreach(validateFeedShape(df, _))
-    commit("overwrite", expected) { (next, base) =>
-      writeVersion(df, next)
+    commit("overwrite", expected) { (dir, base) =>
+      writeVersion(df, dir)
       changes.foreach { c =>
-        writeFeed(next, c)
+        writeFeed(dir, c)
         if (feedVerifyEnabled(df))
           verifyDeclaredFeed(feedBaseline(df, base), df, c)
       }
       // the version dir is complete — census it for the commit log
       // OUTSIDE the lock (footer stats reads); an overwrite's adds ARE
       // the full version, so the record doubles as a full file set
-      val (adds, feed) = commitCensus(next)
+      val (adds, feed) = commitCensus(dir)
       ParquetTable.Staged(adds, feed, applied = applied)
     }
   }
 
   /** The feed-verification baseline: version `base`, the one live when
-    * [[commit]] reserved the dir under its lock — a concurrent commit
-    * landing afterwards cannot repoint it. First write: a FRESH empty
-    * relation, never df.limit(0) — the latter shares df's plan leaf,
-    * and the verification's diff-vs-declared exceptAll over three frames
-    * off one leaf can trip Catalyst's attribute rebinding (seen with a
+    * [[commit]] began staging. First write: a FRESH empty relation,
+    * never df.limit(0) — the latter shares df's plan leaf, and the
+    * verification's diff-vs-declared exceptAll over three frames off one
+    * leaf can trip Catalyst's attribute rebinding (seen with a
     * dropDuplicates-derived df).
     */
   private def feedBaseline(df: DataFrame, base: Int): DataFrame =
@@ -388,14 +410,14 @@ final class ParquetTable(val path: String,
     else df.sparkSession.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
 
-  /** Census of a COMPLETE staged version dir for the commit log: data
-    * files (with footer min/max stats — read here, at commit time, the
-    * ONE footer pass; reads plan off the log afterwards) and feed
-    * files, both relative to the version dir.
+  /** Census of a COMPLETE staged dir for the commit log: data files
+    * (with footer min/max stats — read here, at commit time, the ONE
+    * footer pass; reads plan off the log afterwards) and feed files,
+    * both relative to the dir, which the commit makes the version dir.
     */
   private def commitCensus(
-      next: String): (Seq[VersionLog.FileEntry], Seq[String]) = {
-    val verDir = Paths.get(path, next)
+      dir: String): (Seq[VersionLog.FileEntry], Seq[String]) = {
+    val verDir = Paths.get(path, dir)
     import scala.jdk.CollectionConverters._
     val data = Seq.newBuilder[(java.nio.file.Path, String)]
     val feed = Seq.newBuilder[String]
@@ -414,24 +436,9 @@ final class ParquetTable(val path: String,
       if (captureStats) VersionLog.collectStats(sorted)
       else sorted.map { case (abs, rel) =>
         VersionLog.FileEntry(rel, Map.empty[String, VersionLog.ColStat],
-          try Some(Files.size(abs)) catch { case _: Exception => None }) }
+          Files.size(abs)) }
     (adds, feed.result().sorted)
   }
-
-  /** Write the commit's [[VersionLog]] record (+ periodic checkpoint).
-    * Called right after a successful pointer swap, still under the
-    * commit lock (serializes checkpoint construction); best-effort by
-    * the log's contract — [[VersionLog.append]] swallows every failure,
-    * so a commit never fails on log IO.
-    */
-  private def logCommit(next: String, kind: String,
-      staged: ParquetTable.Staged): Unit =
-    VersionLog.append(path, VersionLog.Record(next.drop(2).toInt, kind,
-      staged.adds, staged.feed, staged.removedPrefixes, staged.renamed,
-      // partitioned append/replace link walks skip the base's root-level
-      // flat-fallback parquet — the file-set resolution must too
-      dropRootFlat = kind != "overwrite" && partitionColumns.nonEmpty,
-      applied = staged.applied))
 
   private def feedVerifyEnabled(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("graft.cdf.verifyDeclaredChanges")
@@ -459,15 +466,15 @@ final class ParquetTable(val path: String,
     }
   }
 
-  /** Persist the declared feed inside the staged version dir — it rides
-    * the commit's atomicity (built before the pointer swap, deleted with
-    * the staging dir on failure). Same empty-write fallback as
+  /** Persist the declared feed inside the staged dir — it rides the
+    * commit's atomicity (built before the pointer swap, deleted with the
+    * staged dir on failure). Same empty-write fallback as
     * [[writeVersion]]: an all-valid batch legitimately declares an empty
     * feed, and the dir must stay readable.
     */
-  private def writeFeed(next: String, changes: DataFrame): Unit = {
-    val feedDir = Paths.get(path, next, ChangesDir)
-    JobLabel(changes.sparkSession, s"graft:writeFeed $path/$next") {
+  private def writeFeed(dir: String, changes: DataFrame): Unit = {
+    val feedDir = Paths.get(path, dir, ChangesDir)
+    JobLabel(changes.sparkSession, s"graft:writeFeed $path/$dir") {
       changes.write.mode("append").parquet(feedDir.toString)
     }
     ensureReadable(feedDir, changes)
@@ -518,20 +525,17 @@ final class ParquetTable(val path: String,
     * MiB of new shuffle volume each) before being scoped back to the
     * replace path (a partitioned one still gets one writer per leaf from
     * [[byLeaf]]). Skipped when the caller declared a layout
-    * ([[hasExplicitLayout]]), when AQE is off (a REBALANCE without AQE
-    * is just an unconditional extra shuffle), and under
-    * `graft.write.rebalance=off`.
+    * ([[hasExplicitLayout]]) and when AQE is off (a REBALANCE without
+    * AQE is just an unconditional extra shuffle).
     */
   private def sizedForWrite(df: DataFrame): DataFrame = {
-    val conf = df.sparkSession.conf
     // the RESOLVED AQE flag, not a string compare of the raw conf value:
     // "TRUE"/"True" parse as enabled, and a REBALANCE hint without AQE
     // is just one unconditional extra shuffle
     val aqeOn = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf.adaptiveExecutionEnabled
-    val on = !conf.getOption("graft.write.rebalance").contains("off") &&
-      aqeOn && !hasExplicitLayout(df)
+    val on = aqeOn && !hasExplicitLayout(df)
     if (!on || partitionColumns.isEmpty) df
     else df.hint("rebalance", partitionColumns: _*)
   }
@@ -577,25 +581,21 @@ final class ParquetTable(val path: String,
         partitionColumns.map(col): _*)
     }
 
-  private def writeVersion(df: DataFrame, next: String): Unit = {
-    writeData(df, next, "graft:writeVersion")
-    ensureReadable(Paths.get(path, next), df)
+  private def writeVersion(df: DataFrame, dir: String): Unit = {
+    writeData(df, dir, "graft:writeVersion")
+    ensureReadable(Paths.get(path, dir), df)
     // commit the schema as version metadata (see storedSchema)
-    Files.writeString(Paths.get(path, next, SchemaFile), df.schema.json)
+    Files.writeString(Paths.get(path, dir, SchemaFile), df.schema.json)
   }
 
-  /** Write `df` into the staged dir `next` as the job labeled `label`.
-    * mode("append"), NOT "overwrite": the reserved dir is empty, so the
-    * two are equivalent for content — but overwrite DELETES the dir
-    * before recreating it, and in that window a concurrent writer's
-    * reserveNextDir would see the number as free and stage into the same
-    * dir (the exact collision reservation exists to prevent).
+  /** Write `df` into the (empty, already created) staged dir `dir` as
+    * the job labeled `label`.
     */
-  private def writeData(df: DataFrame, next: String, label: String): Unit = {
+  private def writeData(df: DataFrame, dir: String, label: String): Unit = {
     val w = byLeaf(df).write.mode("append")
-    JobLabel(df.sparkSession, s"$label $path/$next") {
+    JobLabel(df.sparkSession, s"$label $path/$dir") {
       (if (partitionColumns.nonEmpty) w.partitionBy(partitionColumns: _*)
-       else w).parquet(s"$path/$next")
+       else w).parquet(s"$path/$dir")
     }
   }
 
@@ -617,9 +617,6 @@ final class ParquetTable(val path: String,
   }
 
   private def swapPointer(next: String): Unit = {
-    // the version is complete — clear its staging marker (always called
-    // under the commit lock) so vacuum can treat it as a normal version
-    Files.deleteIfExists(Paths.get(path, next, StagingMarker))
     val tmp = Paths.get(path, "_current.tmp")
     Files.writeString(tmp, next)
     Files.move(tmp, pointer, StandardCopyOption.REPLACE_EXISTING,
@@ -680,15 +677,15 @@ final class ParquetTable(val path: String,
     // files, so a concurrent commit in between would be silently
     // dropped — the stale committer fails like overwriteIf, before the
     // delta write + link walk and again at swap time
-    commit("append", Some(baseV)) { (next, _) =>
-      writeData(df, next, "graft:appendWrite")
+    commit("append", Some(baseV)) { (dir, _) =>
+      writeData(df, dir, "graft:appendWrite")
       // census BEFORE the link walk: the dir holds exactly the delta's
       // files here, which is precisely the step delta the commit log
       // records (and the CDF fast path later serves without walking)
-      val (adds, _) = commitCensus(next)
-      val renamed = linkBase(prevDir, next, evolved, df.sparkSession,
+      val (adds, _) = commitCensus(dir)
+      linkBase(prevDir, dir, evolved, df.sparkSession,
         "appendVersion")(_ => false)
-      ParquetTable.Staged(adds, renamed = renamed)
+      ParquetTable.Staged(adds)
     }
   }
 
@@ -848,30 +845,30 @@ final class ParquetTable(val path: String,
         alsoReplace.map(renderParts).getOrElse(Set.empty)
     }
     val depth = partitionColumns.size
-    commit("replace", Some(baseV)) { (next, _) =>
-      writeData(sizedForWrite(df), next, "graft:replaceWrite")
-      // the declared feed rides the staged version dir (built before the
-      // pointer swap, deleted with the staging dir on failure)
-      changes.foreach(writeFeed(next, _))
+    commit("replace", Some(baseV)) { (dir, _) =>
+      writeData(sizedForWrite(df), dir, "graft:replaceWrite")
+      // the declared feed rides the staged dir (built before the pointer
+      // swap, deleted with it on failure)
+      changes.foreach(writeFeed(dir, _))
       // census BEFORE the link walk (appendVersion's rationale)
-      val (adds, feed) = commitCensus(next)
+      val (adds, feed) = commitCensus(dir)
       // links skip every file under a REPLACED leaf-partition dir (full
       // tuple prefix); the sidecar keeps the base schema — no evolution
       // through this path
-      val renamed = linkBase(prevDir, next,
+      linkBase(prevDir, dir,
           storedSchema(prevDir).getOrElse(df.schema), df.sparkSession,
           "replacePartitions") { rel =>
         rel.getNameCount > depth && replaced.contains(
           (0 until depth).map(i => rel.getName(i).toString).toVector)
       }
       ParquetTable.Staged(adds, feed,
-        replaced.toSeq.map(_.mkString("/")).sorted, renamed, applied)
+        replaced.toSeq.map(_.mkString("/")).sorted, applied)
     }
   }
 
   /** The link half of a link-union commit ([[appendVersion]],
     * [[replacePartitions]]): link the base version's files into the
-    * staged dir `next`, next to the delta's writes, except what
+    * staged dir `dir`, next to the delta's writes, except what
     * `skip(rel)` rejects; then commit `schema` as the new version's
     * sidecar. The base's `_schema.json` is never linked: writing through
     * a linked name would corrupt the shared inode (and the base
@@ -889,14 +886,13 @@ final class ParquetTable(val path: String,
     * level, and skipping those would DROP them from the new version. So
     * the skipped files are verified empty (one tiny job on a rare path)
     * and the partition-spec mismatch fails loudly instead of losing data.
-    * Returns whether a name collision forced a renamed link.
     */
-  private def linkBase(base: java.nio.file.Path, next: String,
+  private def linkBase(base: java.nio.file.Path, dir: String,
       schema: org.apache.spark.sql.types.StructType, spark: SparkSession,
-      op: String)(skip: java.nio.file.Path => Boolean): Boolean = {
-    val nextDir = Paths.get(path, next)
+      op: String)(skip: java.nio.file.Path => Boolean): Unit = {
+    val nextDir = Paths.get(path, dir)
     val flat = Seq.newBuilder[java.nio.file.Path]
-    val renamed = linkFiles(base, nextDir) { rel =>
+    linkFiles(base, nextDir) { rel =>
       val rootFlat = partitionColumns.nonEmpty && rel.getNameCount == 1 &&
         rel.toString.endsWith(".parquet")
       if (rootFlat) flat += base.resolve(rel)
@@ -912,27 +908,22 @@ final class ParquetTable(val path: String,
           "was written unpartitioned; rewrite the table under the new " +
           "partition spec instead")
     Files.writeString(nextDir.resolve(SchemaFile), schema.json)
-    renamed
   }
 
   /** Hard-link every file of version dir `src` into `dst`, mirroring rel
     * paths, except what `skip(rel)` rejects — and never job markers,
-    * Hadoop's hidden `.crc` checksum siblings (a checksum must be named
-    * `.<file>.crc` to pair with its data file, so a collision-renamed one
-    * would be useless, and Hadoop skips verification when it is simply
-    * absent), the staging/data-vacuumed markers, or `src`'s `_changes/`
-    * feed (it describes THAT commit's delta; riding into `dst` would
-    * mislabel it as this commit's feed). Falls back to copying where the
-    * filesystem refuses links. Part-file names carry write UUIDs so
-    * collisions are theoretical, but a silent skip would drop data: a
-    * colliding name links as `linked_v<src>_<name>` and the result is
-    * true, which poisons the log's file-SET resolution only.
+    * Hadoop's hidden `.crc` checksum siblings (Hadoop skips verification
+    * when one is simply absent), the data-vacuumed marker, or `src`'s
+    * `_changes/` feed (it describes THAT commit's delta; riding into
+    * `dst` would mislabel it as this commit's feed). Falls back to
+    * copying where the filesystem refuses links. Part-file names carry
+    * write UUIDs, so a name already present in `dst` is a broken
+    * invariant: it fails the commit instead of dropping or shadowing
+    * data.
     */
   private def linkFiles(src: java.nio.file.Path, dst: java.nio.file.Path)(
-      skip: java.nio.file.Path => Boolean): Boolean = {
+      skip: java.nio.file.Path => Boolean): Unit = {
     import scala.jdk.CollectionConverters._
-    val srcV = src.getFileName.toString.drop(2).toInt
-    var renamed = false
     val walk = Files.walk(src)
     try walk.iterator().asScala.foreach { p =>
       val n = p.getFileName.toString
@@ -940,25 +931,35 @@ final class ParquetTable(val path: String,
       val inFeed = rel.getNameCount > 1 &&
         rel.getName(0).toString == ChangesDir
       if (Files.isRegularFile(p) && n != "_SUCCESS" && !n.startsWith(".") &&
-          n != StagingMarker && n != DataVacuumedMarker && !inFeed &&
-          !skip(rel)) {
-        val target0 = dst.resolve(rel)
-        Files.createDirectories(target0.getParent)
-        val target =
-          if (Files.exists(target0)) {
-            renamed = true
-            target0.resolveSibling(s"linked_v${srcV}_$n")
-          } else target0
+          n != DataVacuumedMarker && !inFeed && !skip(rel)) {
+        val target = dst.resolve(rel)
+        Files.createDirectories(target.getParent)
         try Files.createLink(target, p)
         catch {
+          case e: java.nio.file.FileAlreadyExistsException =>
+            throw new IllegalStateException(
+              s"link-name collision committing to $path: $rel", e)
           case _: UnsupportedOperationException | _: FileSystemException =>
-            Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
+            Files.copy(p, target)
         }
       }
     }
     finally walk.close()
-    renamed
   }
+
+  /** The data files of version `verName`, the live one, resolved from
+    * the commit log. Every version up to the live one has its record, so
+    * a failure here is a damaged log, and it is loud.
+    */
+  private def liveFiles(verName: String): Seq[VersionLog.FileEntry] =
+    ParquetTable.resolveFilesCached(path, verName.drop(2).toInt).getOrElse(
+      throw new IllegalStateException(s"the commit log of table $path " +
+        s"does not resolve its live version $verName"))
+
+  /** [[liveFiles]] of the live version. */
+  private[io] def liveFiles: Seq[VersionLog.FileEntry] =
+    liveFiles(currentVersion.getOrElse(
+      throw new IllegalStateException(s"table at $path does not exist")))
 
   /** Live version number (1-based). */
   def version: Int = currentVersion
@@ -1053,7 +1054,7 @@ final class ParquetTable(val path: String,
     require(!Files.exists(srcDir.resolve(DataVacuumedMarker)),
       s"restoreVersion: version $v of $path was data-vacuumed (feed " +
         "retained) — its snapshot is no longer restorable")
-    commit("overwrite", Some(curV))((next, _) => linkSnapshot(path, v, next))
+    commit("overwrite", Some(curV))((dir, _) => linkSnapshot(path, v, dir))
   }
 
   /** Zero-copy CLONE (Delta `CREATE TABLE … CLONE src`): a NEW table at
@@ -1082,24 +1083,24 @@ final class ParquetTable(val path: String,
       throw new IllegalStateException(s"cloneTo: table at $path does not exist"))
     val srcV = srcName.drop(2).toInt
     // expected 0: a concurrent create at destPath fails the clone
-    dest.commit("overwrite", Some(0))((next, _) =>
-      dest.linkSnapshot(path, srcV, next))
+    dest.commit("overwrite", Some(0))((dir, _) =>
+      dest.linkSnapshot(path, srcV, dir))
   }
 
   /** Stage a snapshot commit ([[restoreVersion]], [[cloneTo]]): link
     * every file of version `srcV` of the table at `srcPath` — data files
     * and the `_schema.json` sidecar, rel paths mirrored — into this
-    * table's staged dir `next`. The record carries the source's per-file
+    * table's staged dir `dir`. The record carries the source's per-file
     * stats and sizes RESOLVED FROM ITS LOG when it can (zero footer
-    * re-opens); an unresolvable log degrades to the commit-time census.
-    * `srcV`'s marker rides along: it describes exactly this data.
+    * re-opens); a version retired below the log horizon takes the
+    * commit-time census. `srcV`'s marker rides along: it describes
+    * exactly this data.
     */
   private def linkSnapshot(srcPath: String, srcV: Int,
-      next: String): ParquetTable.Staged = {
-    val renamed = linkFiles(Paths.get(srcPath, f"v_$srcV%05d"),
-      Paths.get(path, next))(_ => false)
+      dir: String): ParquetTable.Staged = {
+    linkFiles(Paths.get(srcPath, f"v_$srcV%05d"), Paths.get(path, dir))(_ => false)
     ParquetTable.Staged(VersionLog.resolveFiles(srcPath, srcV)
-      .getOrElse(commitCensus(next)._1), renamed = renamed,
+      .getOrElse(commitCensus(dir)._1),
       applied = VersionLog.recordOf(srcPath, srcV)
         .map(_.applied).getOrElse(Map.empty))
   }
@@ -1113,52 +1114,50 @@ final class ParquetTable(val path: String,
     * the rows matching `bounds` (files without stats survive; NULLs
     * never satisfy a bound): callers apply the real filter on top, and
     * Catalyst still pushes it into the surviving files' row groups.
-    * Falls back to the full [[read]] when the log cannot resolve the
-    * live file set (legacy/unlogged tables) — pruning is an
-    * optimization, never a correctness dependency.
     */
   def readPruned(spark: SparkSession, bounds: Seq[ColumnBound]): DataFrame = {
-    val verDir = Paths.get(currentPath)
-    VersionLog.resolveFiles(path, version) match {
-      case None => read(spark)
-      case Some(files) =>
-        val kept = files.filter(f => ColumnBound.survives(f.stats, bounds))
-        val schema = storedSchema(verDir)
-        if (kept.isEmpty)
-          schema match {
-            case Some(st) => spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), st)
-            case None => read(spark).limit(0)
-          }
-        else {
-          val paths = kept.map(f => verDir.resolve(f.rel).toString)
-          val rd = schema.fold(spark.read)(st => spark.read.schema(st))
-          rd.option("basePath", verDir.toString).parquet(paths: _*)
-        }
+    // pin the pointer once (read's rationale)
+    val verName = currentVersion.getOrElse(
+      throw new IllegalStateException(s"table at $path does not exist"))
+    val verDir = Paths.get(path, verName)
+    val kept = liveFiles(verName)
+      .filter(f => ColumnBound.survives(f.stats, bounds))
+    val schema = storedSchema(verDir)
+    if (kept.isEmpty)
+      schema match {
+        case Some(st) => spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), st)
+        case None => readDir(spark, verDir.toString).limit(0)
+      }
+    else {
+      val paths = kept.map(f => verDir.resolve(f.rel).toString)
+      val rd = schema.fold(spark.read)(st => spark.read.schema(st))
+      rd.option("basePath", verDir.toString).parquet(paths: _*)
     }
   }
 
   /** The live version's file count after pruning on `bounds` — the IO
     * proof seam (ScaleSpec): (kept, total), resolved from the commit
-    * log alone, no footer opens. None when the log cannot resolve.
+    * log alone, no footer opens.
     */
-  def prunedFileCensus(bounds: Seq[ColumnBound]): Option[(Int, Int)] =
-    VersionLog.resolveFiles(path, version).map { files =>
-      (files.count(f => ColumnBound.survives(f.stats, bounds)), files.size)
-    }
+  def prunedFileCensus(bounds: Seq[ColumnBound]): (Int, Int) = {
+    val files = liveFiles
+    (files.count(f => ColumnBound.survives(f.stats, bounds)), files.size)
+  }
 
   /** Change-data-feed emulation between two retained versions, with
     * MULTISET semantics: per full-row tuple, the copy-count delta between
     * the versions is emitted as that many insert/delete rows (a row going
     * 1→3 copies reports 2 inserts, like Delta CDF). Updates surface as
     * delete(old)+insert(new). NULL-safe throughout — grouping collates NULL
-    * values, and the version join compares with `<=>`. Two shuffles (one
-    * count per side sharing the join's partitioning); a real CDF log
-    * records changes at write time instead — this is the after-the-fact
-    * form the versioned layout gives for free.
+    * values, and the version join compares with `<=>`. Served from the
+    * commit log when every step's record classifies it (a write-side
+    * feed or an append's added files: [[logSpanDelta]]), else with the
+    * log-covered suffix of a span behind the retention horizon
+    * ([[hybridSpanDelta]]), else by the full snapshot diff
+    * ([[multisetDiff]], two shuffles).
     */
   def changesBetween(spark: SparkSession, fromV: Int, toV: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
     // align both sides on the TO version's schema (Delta's convention for
     // CDF across schema evolution): columns the old version lacks read as
     // NULL there, so a pure column-add changes nothing unless values do;
@@ -1171,38 +1170,22 @@ final class ParquetTable(val path: String,
     require(cols.forall(c => !c.startsWith("__") && c != "_change_type"),
       s"changesBetween: table columns may not use the reserved names " +
         s"__* or _change_type (got ${cols.mkString(", ")})")
-    // commit-log span resolution FIRST: O(span/K) sidecar reads classify
-    // every step (feed / append delta) with ZERO version-dir walks —
-    // the serving-cadence path (thousands of versions); any gap falls
-    // through to the walk-based classifications below, which remain the
-    // correctness baseline for legacy/unlogged tables
-    logSpanDelta(spark, fromV, toV, to, cols) match {
-      case Some(delta) => return delta
-      case None => ()
-    }
-    // HYBRID split (a span consumer behind the log-retention horizon):
-    // serve the log-covered suffix from grouped feed/append scans and
-    // pay the walk/diff only for the retired prefix, instead of walking
-    // the WHOLE span
-    hybridSpanDelta(spark, fromV, toV, to, cols) match {
-      case Some(delta) => return delta
-      case None => ()
-    }
-    appendOnlyDelta(spark, fromV, toV, to, cols) match {
-      case Some(delta) => return delta
-      case None => ()
-    }
-    stepDeltas(spark, fromV, toV, to, cols) match {
-      case Some(delta) => return delta
-      case None => ()
-    }
-    val from0 = readVersion(spark, fromV)
-    val fromAligned = cols
-      .foldLeft(from0)((d, c) =>
+    logSpanDelta(spark, fromV, toV, to, cols)
+      .orElse(hybridSpanDelta(spark, fromV, toV, to, cols))
+      .getOrElse(multisetDiff(alignTo(readVersion(spark, fromV), to, cols),
+        to, cols))
+  }
+
+  /** `from` projected onto `to`'s columns `cols`: columns it lacks read
+    * as typed NULLs.
+    */
+  private def alignTo(from: DataFrame, to: DataFrame,
+      cols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    cols.foldLeft(from)((d, c) =>
         if (d.columns.contains(c)) d
         else d.withColumn(c, lit(null).cast(to.schema(c).dataType)))
       .select(cols.map(col): _*)
-    multisetDiff(fromAligned, to, cols)
   }
 
   /** The generic full-width snapshot diff (the correctness BASELINE every
@@ -1230,47 +1213,6 @@ final class ParquetTable(val path: String,
           .as("_change_type"): _*)
   }
 
-  /** CDF fast path over PERSISTED per-commit feeds: when every step
-    * fromV+1..toV either carries a write-side `_changes/` feed
-    * ([[overwriteWithChanges]]) or is an append-only version (file-set
-    * subset — its step delta is the new files, all inserts), the span's
-    * net multiset delta is the SIGNED SUM of the per-step deltas
-    * (projection onto the TO schema is linear over multiset counts, so
-    * the per-step sum telescopes to snapshot-minus-snapshot even across
-    * schema evolution mid-span). Cost: O(Σ|step changes|) — no snapshot
-    * is ever read; a single uncovered step returns None and the generic
-    * diff stays the baseline. Netting (groupBy over the concatenated
-    * feeds) keeps the output semantics EXACTLY [[multisetDiff]]'s: a row
-    * inserted then deleted inside the span cancels out.
-    */
-  private def stepDeltas(spark: SparkSession, fromV: Int, toV: Int,
-      to: DataFrame, cols: Seq[String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
-    // feeds only describe FORWARD steps; a reverse span (time-travel
-    // comparisons call changesBetween(2, 1)) is the generic diff's job
-    if (fromV >= toV) return None
-    val steps = ((fromV + 1) to toV).map { v =>
-      readFeed(spark, v).orElse {
-        // append-only step: its exact delta is the new files, all inserts
-        if (Files.exists(Paths.get(path, f"v_${v - 1}%05d")) &&
-            Files.exists(Paths.get(path, f"v_$v%05d"))) {
-          val stepTo = readVersion(spark, v)
-          appendOnlyDelta(spark, v - 1, v, stepTo, stepTo.columns.toIndexedSeq)
-        } else None
-      }
-    }
-    if (steps.exists(_.isEmpty)) None
-    else Some(netSteps(steps.flatten, to, cols))
-  }
-
-  /** Net per-step delta frames into one span delta with EXACTLY
-    * [[multisetDiff]]'s output semantics (a row inserted then deleted
-    * inside the span cancels). Shared by the walk-based and the
-    * commit-log step resolutions so the two paths cannot drift. Aligns
-    * every step onto the TO schema: missing columns read as typed
-    * NULLs, dropped columns leave the diff, matched columns cast to
-    * the TO type (a no-op unless the span retyped).
-    */
   /** Project one step's delta frame onto the TO schema (missing columns
     * as typed NULLs, matched columns cast — a no-op unless the span
     * retyped).
@@ -1284,6 +1226,13 @@ final class ParquetTable(val path: String,
     } :+ col("_change_type"): _*)
   }
 
+  /** Net per-step delta frames into one span delta with EXACTLY
+    * [[multisetDiff]]'s output semantics (a row inserted then deleted
+    * inside the span cancels), every step aligned onto the TO schema
+    * ([[alignStep]]). Projection onto the TO schema is linear over
+    * multiset counts, so the per-step sum telescopes to
+    * snapshot-minus-snapshot even across schema evolution mid-span.
+    */
   private def netSteps(steps: Seq[DataFrame], to: DataFrame,
       cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -1304,39 +1253,24 @@ final class ParquetTable(val path: String,
     * the retired records below `h` =
     * [[VersionLog.resolvableSuffixStart]] make [[logSpanDelta]] refuse
     * the WHOLE span, but the suffix (h, toV] is still fully log-served
-    * — so compute the prefix (fromV, h] through the walk/diff ladder IN
-    * h's OWN schema (append-only file census, per-step walk, snapshot
-    * multiset diff — whichever first applies), take the suffix from the
-    * grouped log path, and NET the two delta frames ([[netSteps]] —
-    * exactly the semantics one diff of the whole span produces, since
-    * multiset deltas telescope). None when the span is entirely
-    * unresolvable or entirely resolvable (the plain ladders own those),
-    * or when a snapshot the prefix needs was vacuumed.
+    * — so take the prefix (fromV, h] as the snapshot diff IN h's OWN
+    * schema, the suffix from the grouped log path, and NET the two
+    * delta frames ([[netSteps]] — exactly the semantics one diff of the
+    * whole span produces, since multiset deltas telescope). None when
+    * the span is entirely unresolvable or entirely resolvable, or when
+    * a snapshot the prefix needs was vacuumed.
     */
   private def hybridSpanDelta(spark: SparkSession, fromV: Int, toV: Int,
       to: DataFrame, cols: Seq[String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{col, lit}
     if (fromV >= toV) return None
     val h = VersionLog.resolvableSuffixStart(path, fromV, toV)
     if (h <= fromV || h >= toV) return None
     logSpanDelta(spark, h, toV, to, cols).flatMap { sfx =>
-      val toH =
-        try readVersion(spark, h)
-        catch { case _: Exception => return None }
+      val (fromDf, toH) =
+        try (readVersion(spark, fromV), readVersion(spark, h))
+        catch { case _: IllegalArgumentException => return None }
       val hCols = toH.columns.toIndexedSeq
-      val pre = appendOnlyDelta(spark, fromV, h, toH, hCols)
-        .orElse(stepDeltas(spark, fromV, h, toH, hCols))
-        .getOrElse {
-          val from0 =
-            try readVersion(spark, fromV)
-            catch { case _: Exception => return None }
-          val fromAligned = hCols
-            .foldLeft(from0)((d, c) =>
-              if (d.columns.contains(c)) d
-              else d.withColumn(c, lit(null).cast(toH.schema(c).dataType)))
-            .select(hCols.map(col): _*)
-          multisetDiff(fromAligned, toH, hCols)
-        }
+      val pre = multisetDiff(alignTo(fromDf, toH, hCols), toH, hCols)
       Some(netSteps(Seq(pre, sfx), to, cols))
     }
   }
@@ -1346,8 +1280,8 @@ final class ParquetTable(val path: String,
     * feed-carrying commits read exactly their recorded feed files,
     * append commits read exactly their recorded added files as inserts
     * — in O(span/K) sidecar reads and zero version-dir walks. Any gap
-    * (missing record, unlogged step kind, reclaimed files) returns
-    * None and the walk-based classification stays the baseline.
+    * (a retired record, a step with neither feed nor append delta,
+    * reclaimed files) returns None for the caller's snapshot diff.
     */
   private def logSpanDelta(spark: SparkSession, fromV: Int, toV: Int,
       to: DataFrame, cols: Seq[String]): Option[DataFrame] = {
@@ -1436,8 +1370,7 @@ final class ParquetTable(val path: String,
           lit("insert").as("_change_type"): _*))
       else if (!anyFeed)
         // appends only GROW the multiset: the union of the adds IS the
-        // net delta — skip the netting shuffle entirely (the walk-based
-        // fast path's zero-shuffle shape)
+        // net delta — skip the netting shuffle entirely
         Some(frames.map(alignStep(_, to, cols)).reduce(_ unionByName _))
       else Some(netSteps(frames, to, cols))
     }
@@ -1492,121 +1425,6 @@ final class ParquetTable(val path: String,
     } else None
   }
 
-  /** The persisted write-side feed of version `v`, read under that
-    * version's COMMITTED schema plus `_change_type` (never footer
-    * inference — the O(1)-resolution rationale of [[storedSchema]]).
-    */
-  private def readFeed(spark: SparkSession, v: Int): Option[DataFrame] = {
-    import scala.jdk.CollectionConverters._
-    val verDir = Paths.get(path, f"v_$v%05d")
-    val feedDir = verDir.resolve(ChangesDir)
-    if (!Files.exists(feedDir)) None
-    else {
-      // list the part files explicitly: passing the `_`-prefixed dir as
-      // a root path trips DataSource's hidden-path warning on every read
-      // (the prefix exists to hide the feed from TABLE scans, not from
-      // its own reader); writeFeed guarantees at least one file
-      val files = {
-        val walk = Files.walk(feedDir)
-        try walk.iterator().asScala
-          .filter(p => Files.isRegularFile(p) &&
-            p.getFileName.toString.endsWith(".parquet"))
-          .map(_.toString).toSeq.sorted
-        finally walk.close()
-      }
-      if (files.isEmpty) None // half-written legacy residue: not a feed
-      else {
-        val schema = storedSchema(verDir).map(st =>
-          org.apache.spark.sql.types.StructType(st.fields :+
-            org.apache.spark.sql.types.StructField("_change_type",
-              org.apache.spark.sql.types.StringType)))
-        Some(schema match {
-          case Some(st) => spark.read.schema(st).parquet(files: _*)
-          case None => spark.read.parquet(files: _*)
-        })
-      }
-    }
-  }
-
-  /** CDF fast path for append-chain versions: [[appendVersion]] builds
-    * every new version as the previous version's files — hard links,
-    * relative names preserved — plus the delta's new files, so when
-    * fromV's parquet file set is a SUBSET of toV's (by relative path;
-    * part-file names carry write UUIDs, so an equal name means the same
-    * linked inode, not a coincidence), the multiset delta is EXACTLY the
-    * rows of the new files, all inserts: no old-version scan, no
-    * full-width diff join — O(|delta|) instead of O(|fromV| + |toV|).
-    * This is what keeps the streaming intake mirrors' per-trigger
-    * advance O(batch) at any accumulated size: they commit through
-    * appendVersion, so every consecutive-version CDF takes this path.
-    * Any rewrite in the chain (overwrite, replacePartitions' touched
-    * dirs, compaction, the empty-write schema fallback file that append
-    * deliberately does not link) breaks the subset property and returns
-    * None — the generic full diff stays the correctness baseline.
-    */
-  private def appendOnlyDelta(spark: SparkSession, fromV: Int, toV: Int,
-      to: DataFrame,
-      cols: Seq[String]): Option[DataFrame] = {
-    import org.apache.spark.sql.functions._
-    import scala.jdk.CollectionConverters._
-    val fromDir = Paths.get(path, f"v_$fromV%05d")
-    val toDir = Paths.get(path, f"v_$toV%05d")
-    // a vacuumed/absent version must fail through readVersion's
-    // descriptive require on the generic path, not a raw
-    // NoSuchFileException from the walk here
-    if (!Files.exists(fromDir) || !Files.exists(toDir)) return None
-    // a data-vacuumed version's EMPTIED file set would read as a
-    // trivial subset and mislabel the whole TO snapshot as inserts
-    if (Files.exists(fromDir.resolve(DataVacuumedMarker)) ||
-        Files.exists(toDir.resolve(DataVacuumedMarker))) return None
-    def parquetFiles(d: java.nio.file.Path): Map[String, java.nio.file.Path] = {
-      val walk = Files.walk(d)
-      try walk.iterator().asScala
-        .filter { p =>
-          // feed files are commit METADATA, not table data: counting
-          // them would break the subset property for any append that
-          // follows a feed-carrying overwrite
-          val rel = d.relativize(p)
-          val inFeed = rel.getNameCount > 1 &&
-            rel.getName(0).toString == ChangesDir
-          Files.isRegularFile(p) && !inFeed &&
-            p.getFileName.toString.endsWith(".parquet")
-        }
-        .map(p => d.relativize(p).toString -> p).toMap
-      finally walk.close()
-    }
-    val fromFiles = parquetFiles(fromDir)
-    val toFiles = parquetFiles(toDir)
-    if (!fromFiles.keySet.subsetOf(toFiles.keySet)) None
-    else {
-      val newPaths = (toFiles -- fromFiles.keySet).values
-        .map(_.toString).toSeq.sorted
-      if (newPaths.isEmpty)
-        Some(to.limit(0)
-          .select(cols.map(col) :+ lit("insert").as("_change_type"): _*))
-      else {
-        // Read under the TO version's schema, never inference: basePath
-        // recovers partition-column VALUES from the dir layout but would
-        // infer their TYPES (bucket=3 reads as int where the committed
-        // schema says long), and columns the delta files lack
-        // (schema-on-read) must surface as typed NULLs — both are what
-        // the explicit schema guarantees.
-        val raw = spark.read.schema(to.schema)
-          .option("basePath", toDir.toString)
-          .parquet(newPaths: _*)
-        Some(raw
-          .select(cols.map(col) :+ lit("insert").as("_change_type"): _*))
-      }
-    }
-  }
-
-  /** Small-file compaction (Delta OPTIMIZE): rewrite the live version into
-    * `targetPartitions` files, optionally clustered by `sortCols`
-    * (Z-order-lite — sorted row groups give parquet min/max skipping on
-    * those columns). At 100 TB the streaming/merge write paths produce many
-    * small files per partition; periodic compaction keeps scan task counts
-    * and footer overhead bounded.
-    */
   /** Delta `DESCRIBE HISTORY`: the RESOLVABLE commit records as a
     * DataFrame — version, kind (overwrite/append/replace), the
     * monotonic commit timestamp, the commit's file/feed footprint and
@@ -1638,6 +1456,13 @@ final class ParquetTable(val path: String,
     spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** Small-file compaction (Delta OPTIMIZE): rewrite the live version into
+    * `targetPartitions` files, optionally clustered by `sortCols`
+    * (Z-order-lite — sorted row groups give parquet min/max skipping on
+    * those columns). At 100 TB the streaming/merge write paths produce many
+    * small files per partition; periodic compaction keeps scan task counts
+    * and footer overhead bounded.
+    */
   def compact(spark: SparkSession, targetPartitions: Int,
       sortCols: Seq[String] = Nil): ParquetTable = {
     import org.apache.spark.sql.functions.{col, xxhash64}
@@ -1695,12 +1520,11 @@ final class ParquetTable(val path: String,
     * repeated vacuums would eventually starve the driver of file handles.
     *
     * `stagingTtlMs` bounds the disk residue of hard-killed writers: a
-    * staging-marked dir below the live version whose marker is OLDER than
-    * the TTL is an orphaned reservation (its writer died without either
-    * committing or cleaning up) and is collected; a RECENT marker is an
-    * in-flight writer and stays protected. Delta's vacuum has the same
-    * shape (retention window vs in-flight transactions). Pass
-    * `Long.MaxValue` to never collect marked dirs.
+    * `_stage_*` dir last modified longer ago than the TTL is an orphan
+    * (its writer died without either committing or cleaning up) and is
+    * collected; a RECENT one is an in-flight writer and stays. Delta's
+    * vacuum has the same shape (retention window vs in-flight
+    * transactions). Pass `Long.MaxValue` to never collect staging dirs.
     */
   def vacuum(stagingTtlMs: Long = 24L * 3600 * 1000): ParquetTable =
     vacuumImpl(stagingTtlMs, Int.MaxValue)
@@ -1727,52 +1551,34 @@ final class ParquetTable(val path: String,
   private def vacuumImpl(stagingTtlMs: Long,
       keepFeedsFrom: Int): ParquetTable =
     ParquetTable.withCommitLock(path) {
-    val keep = currentVersion.toSet
-    val versions = FsUtil.listDir(Paths.get(path))
-      .filter(_.getFileName.toString.startsWith("v_"))
+    val entries = FsUtil.listDir(Paths.get(path))
+    val versions = entries.filter(_.getFileName.toString.startsWith("v_"))
     // vacuum is the ONE destructive operation on a table: with a lost or
     // corrupted _current pointer, "keep the live version" degenerates to
     // "keep nothing" and every version dir — including the recoverable
     // data a manual pointer restore could have saved — would be deleted.
     // The read accessors all throw on a missing pointer; so must this
     // (a never-written table with no versions at all stays a no-op).
-    require(keep.nonEmpty || versions.isEmpty,
+    require(exists || versions.isEmpty,
       s"vacuum: no _current pointer at $path but ${versions.size} version " +
         "dir(s) exist — refusing to delete every version; restore the " +
         "pointer (or remove the directory deliberately) first")
-    // Delete only versions numbered below the live one AND not
-    // staging-marked: dirs above live are necessarily reservations, and
-    // the marker protects the in-flight reservation a LATER commit has
-    // already passed (see reserveNextDir). A crashed writer's unmarked
-    // orphan above the live version survives until a later successful
-    // commit passes its number — then the next vacuum collects it; disk
-    // stays bounded.
+    // versions are numbered under this lock, so everything below the live
+    // one is superseded; a commit's own residue above it is the next
+    // commit's to roll back
     val live = versionNum
-    val now = System.currentTimeMillis()
-    val old = versions.filter { p =>
-      val n = p.getFileName.toString
-      // a RECENTLY staging-marked dir is an IN-FLIGHT writer's
-      // reservation even when numbered below live (a later reservation
-      // can commit first) — deleting it mid-write would let that writer
-      // swap the pointer onto a truncated version. A marker older than
-      // the TTL is a hard-killed writer's orphan; without the age-out the
-      // residue would be retained forever.
-      def inFlight: Boolean = {
-        val marker = p.resolve(StagingMarker)
-        Files.exists(marker) && {
-          val age =
-            try now - Files.getLastModifiedTime(marker).toMillis
-            catch { case _: java.io.IOException => 0L } // racing commit
-          age < stagingTtlMs
-        }
+    versions.foreach { p =>
+      p.getFileName.toString.drop(2).toIntOption.filter(_ < live).foreach { v =>
+        if (v >= keepFeedsFrom) dataVacuumKeepFeed(p)
+        else FsUtil.deleteRecursively(p)
       }
-      !keep.contains(n) && n.drop(2).toIntOption.exists(_ < live) &&
-        !inFlight
     }
-    old.foreach { p =>
-      val v = p.getFileName.toString.drop(2).toIntOption.getOrElse(0)
-      if (v >= keepFeedsFrom) dataVacuumKeepFeed(p)
-      else FsUtil.deleteRecursively(p)
+    val now = System.currentTimeMillis()
+    entries.filter(_.getFileName.toString.startsWith(StagePrefix)).foreach { p =>
+      val age =
+        try now - Files.getLastModifiedTime(p).toMillis
+        catch { case _: java.io.IOException => 0L } // committed meanwhile
+      if (age >= stagingTtlMs) FsUtil.deleteRecursively(p)
     }
     this
   }
@@ -1809,7 +1615,7 @@ object ParquetTable {
   /** What a staged commit contributes to its [[VersionLog.Record]]. */
   private[io] final case class Staged(adds: Seq[VersionLog.FileEntry],
       feed: Seq[String] = Nil, removedPrefixes: Seq[String] = Nil,
-      renamed: Boolean = false, applied: Map[String, Int] = Map.empty)
+      applied: Map[String, Int] = Map.empty)
 
   private val monitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -1887,11 +1693,12 @@ object ParquetTable {
     * dir (`.../table/v_NNNNN`): `Some(pruner)` when the directory name
     * parses as a version, the table's commit log resolves that
     * version's file set, and at least one file carries stats — `None`
-    * otherwise (callers fall back to the plain read; skipping is an
-    * optimization, never a correctness dependency). Shared by
-    * [[ParquetTable.read]]'s default path and the SQL-path catalog rule
-    * ([[org.apache.spark.sql.GraftSqlSkipping]]) so both hand
-    * Catalyst's pushed-down filters to the SAME stats predicate.
+    * otherwise (callers take the plain read; skipping is an
+    * optimization, never a correctness dependency). The SQL-path
+    * catalog rule ([[org.apache.spark.sql.GraftSqlSkipping]]) calls it;
+    * [[ParquetTable.read]] builds the SAME [[prunerOver]] from its live
+    * file set, so both hand Catalyst's pushed-down filters to one stats
+    * predicate.
     */
   def statsPrunerFor(verDir: String): Option[
       Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
@@ -1912,29 +1719,40 @@ object ParquetTable {
     val v =
       try verName.drop(2).toInt
       catch { case _: NumberFormatException => return None }
-    resolveFilesCached(parent.get, v) match {
-      case Some(files) if files.exists(_.stats.nonEmpty) =>
-        // keyed by the FULL rel path, never the file name alone: ONE
-        // partitioned write job reuses the same part-NNNNN-<uuid> name
-        // across every partition dir it writes, so a name-keyed map
-        // would collide and attribute one partition's stats to
-        // another's file — and a mis-attributed range PRUNES rows that
-        // exist (the replay-gate probe bug this comment memorializes)
-        val statsByRel = files.iterator.map(f => f.rel -> f.stats).toMap
-        def relOf(listed: String): Option[String] =
-          try {
-            val p = if (listed.contains(":/"))
-              Paths.get(new java.net.URI(listed))
-            else Paths.get(listed)
-            Some(dirPath.relativize(p.toAbsolutePath.normalize()).toString)
-          } catch { case _: Exception => None }
-        Some(filters => {
-          val pred = StatsPruning.predicate(filters)
-          if (pred.trivial) _ => true
-          else p => relOf(p).flatMap(statsByRel.get)
-            .forall(pred.survives)
-        })
-      case _ => None
+    resolveFilesCached(parent.get, v).flatMap(prunerOver(dirPath, _))
+  }
+
+  /** The stats pruner over version dir `verDir`'s resolved `files`;
+    * None when no file carries stats.
+    */
+  private[io] def prunerOver(verDir: java.nio.file.Path,
+      files: Seq[VersionLog.FileEntry]): Option[
+      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+        (String => Boolean)] = {
+    import java.nio.file.Paths
+    val dirPath = verDir.toAbsolutePath.normalize()
+    if (!files.exists(_.stats.nonEmpty)) None
+    else {
+      // keyed by the FULL rel path, never the file name alone: ONE
+      // partitioned write job reuses the same part-NNNNN-<uuid> name
+      // across every partition dir it writes, so a name-keyed map
+      // would collide and attribute one partition's stats to
+      // another's file — and a mis-attributed range PRUNES rows that
+      // exist (the replay-gate probe bug this comment memorializes)
+      val statsByRel = files.iterator.map(f => f.rel -> f.stats).toMap
+      def relOf(listed: String): Option[String] =
+        try {
+          val p = if (listed.contains(":/"))
+            Paths.get(new java.net.URI(listed))
+          else Paths.get(listed)
+          Some(dirPath.relativize(p.toAbsolutePath.normalize()).toString)
+        } catch { case _: Exception => None }
+      Some(filters => {
+        val pred = StatsPruning.predicate(filters)
+        if (pred.trivial) _ => true
+        else p => relOf(p).flatMap(statsByRel.get)
+          .forall(pred.survives)
+      })
     }
   }
 

@@ -11,11 +11,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * has no Delta jars, so the log is rebuilt from first principles).
   *
   * WHY: without a log, every span-level operation pays O(versions) in
-  * filesystem METADATA work — `changesBetween` probes and walks one
-  * version dir per step to classify it (feed? append-only?), and any
+  * filesystem METADATA work — `changesBetween` would walk one version
+  * dir per step to classify it (feed? append-only?), and any
   * file-level planning (stats pruning) must open parquet footers. At
   * serving cadence (the streaming mirrors commit per trigger) a table
-  * accumulates thousands of versions, and those walks dominate.
+  * accumulates thousands of versions, and those walks would dominate.
   *
   * Layout under `<table>/_log/`:
   *  - `r_NNNNN.txt` — one tiny record per committed version: commit KIND
@@ -31,14 +31,19 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *    since the previous checkpoint embedded, so resolving any state or
   *    span reads O(span/K) sidecar files instead of O(span) dir probes.
   *
-  * The log is strictly ADVISORY: records are written AFTER the pointer
-  * swap succeeds (a failed commit never leaves a record; a crash between
-  * swap and record write leaves a committed version whose step simply
-  * resolves by the walk-based fallback), every reader treats a missing,
-  * torn or unparsable file as "no log" and falls back to the directory
-  * walk that remains the correctness baseline, and all writes are
-  * tmp-then-atomic-rename ([[Sidecar]]'s discipline) so a torn write is
-  * never visible under the real name. TablesSpec pins manifest ≡ walk.
+  * The record is part of the commit ([[ParquetTable]]'s commit
+  * pipeline): under the commit lock the staged dir is renamed to `v_n`
+  * (n = live + 1), `r_n` is written, and only then does the pointer
+  * swap. So version numbers are dense and every version up to the live
+  * one has its record; a record that fails to write fails the commit.
+  * A process killed before the swap leaves `v_n`/`r_n` above the live
+  * version — residue the next commit rolls back ([[discard]]) before it
+  * numbers its own. Checkpoints, record compaction and retirement run
+  * after the swap and stay best-effort ([[maintain]]). All writes are
+  * tmp-then-atomic-rename ([[Sidecar]]'s discipline), so a torn write
+  * is never visible under the real name. A live version the log cannot
+  * resolve is a loud error at the reader, never a directory walk;
+  * specs pin log ≡ walk against a test-scope walk oracle.
   */
 private[graft] object VersionLog {
 
@@ -60,22 +65,17 @@ private[graft] object VersionLog {
 
   /** One data file of a version: path relative to the version dir plus
     * its captured column stats (possibly empty — stats are best-effort)
-    * and its byte size when the census recorded one (None for records
-    * written before sizes were captured — consumers that need exact
-    * totals fall back to a filesystem walk on any None). The size lets
-    * the per-statement catalog registration serve its exact live-bytes
-    * statistic from cached log reads instead of re-stat'ing every live
-    * file — the last O(live files) metadata pass on that path.
+    * and its byte size. The size lets the per-statement catalog
+    * registration serve its exact live-bytes statistic from cached log
+    * reads instead of re-stat'ing every live file.
     */
   final case class FileEntry(rel: String, stats: Map[String, ColStat],
-      size: Option[Long] = None)
+      size: Long)
 
   /** One committed version's log record. `adds` are the data files THIS
     * commit wrote (for overwrite commits that is the complete version);
     * `feed` the persisted `_changes/` parquet files; `removedPrefixes`
-    * the hive dir prefixes a replace commit dropped; `renamed` flags a
-    * collision-renamed hard link (theoretical — UUID part names), which
-    * poisons file-set resolution but not step deltas; `dropRootFlat`
+    * the hive dir prefixes a replace commit dropped; `dropRootFlat`
     * records that the commit's link walk skipped the base version's
     * ROOT-LEVEL parquet (the empty-write schema fallback — partitioned
     * append/replace commits never carry it forward). `applied` is the
@@ -83,7 +83,7 @@ private[graft] object VersionLog {
     * reflects (Delta's `SetTransaction` action); empty = no marker.
     */
   final case class Record(v: Int, kind: String, adds: Seq[FileEntry],
-      feed: Seq[String], removedPrefixes: Seq[String], renamed: Boolean,
+      feed: Seq[String], removedPrefixes: Seq[String],
       dropRootFlat: Boolean = false, ts: Option[Long] = None,
       applied: Map[String, Int] = Map.empty)
 
@@ -137,7 +137,7 @@ private[graft] object VersionLog {
       FileEntry(rel,
         try fileStats(abs, conf)
         catch { case _: Exception => Map.empty[String, ColStat] },
-        try Some(Files.size(abs)) catch { case _: Exception => None })
+        Files.size(abs))
     // Footer opens are independent local reads — fan them out over a
     // bounded pool so a 32-file commit pays ~one footer's latency, not
     // 32 sequential ones (the commit-path cost the r13 census flagged on
@@ -270,47 +270,30 @@ private[graft] object VersionLog {
         if (s.hasNulls) "y" else "n").mkString("\t")
     }).mkString("\t")
 
-  private def parseFileLine(s: String): FileEntry = {
+  /** `<bytes>\t<rel>\t<stats…>`, under the `addz=`/`livez=` keys. */
+  private def sizedFileLine(f: FileEntry): String = s"${f.size}\t${fileLine(f)}"
+
+  private def parseSizedFileLine(s: String): FileEntry = {
     val parts = s.split("\t", -1)
-    val stats = parts.drop(1).grouped(5).collect {
+    val stats = parts.drop(2).grouped(5).collect {
       case Array(c, tpe, mn, mx, nl) =>
         dec(c) -> ColStat(tpe, dec(mn), dec(mx), nl == "y")
     }.toMap
-    FileEntry(dec(parts(0)), stats)
-  }
-
-  /** Sized form: `<bytes>\t<fileLine>` under the `addz=`/`livez=` keys —
-    * a SEPARATE key, not an extra field, so records written before
-    * sizes were captured (plain `add=`/`live=`) keep parsing with the
-    * original 5-field stat grouping untouched.
-    */
-  private def sizedFileLine(f: FileEntry): (String, String) = f.size match {
-    case Some(n) => ("z", s"$n\t${fileLine(f)}")
-    case None => ("", fileLine(f))
-  }
-
-  private def parseSizedFileLine(s: String): FileEntry = {
-    val i = s.indexOf('\t')
-    val n = s.substring(0, i).toLongOption
-    parseFileLine(s.substring(i + 1)).copy(size = n)
+    FileEntry(dec(parts(1)), stats, parts(0).toLong)
   }
 
   private def recordLines(rec: Record): Seq[String] =
     Seq(s"v=${rec.v}", s"kind=${rec.kind}",
-      s"renamed=${if (rec.renamed) 1 else 0}",
       s"dropflat=${if (rec.dropRootFlat) 1 else 0}") ++
       rec.ts.map(t => s"ts=$t").toSeq ++
       rec.applied.toSeq.sortBy(_._1).map { case (k, v) =>
         s"applied=${enc(k)}\t$v" } ++
       rec.feed.map(f => s"feed=${enc(f)}") ++
       rec.removedPrefixes.map(p => s"rm=${enc(p)}") ++
-      rec.adds.map { f =>
-        val (suffix, line) = sizedFileLine(f)
-        s"add$suffix=$line"
-      }
+      rec.adds.map(f => s"addz=${sizedFileLine(f)}")
 
   private def parseRecordLines(lines: Seq[String]): Record = {
-    var v = -1; var kind = ""; var renamed = false; var dropFlat = false
+    var v = -1; var kind = ""; var dropFlat = false
     var ts: Option[Long] = None
     val applied = Map.newBuilder[String, Int]
     val feed = Seq.newBuilder[String]
@@ -322,7 +305,6 @@ private[graft] object VersionLog {
       (l.substring(0, i), l.substring(i + 1)) match {
         case ("v", x) => v = x.toInt
         case ("kind", x) => kind = x
-        case ("renamed", x) => renamed = x == "1"
         case ("dropflat", x) => dropFlat = x == "1"
         case ("ts", x) => ts = x.toLongOption
         case ("applied", x) =>
@@ -330,14 +312,15 @@ private[graft] object VersionLog {
           applied += dec(x.substring(0, t)) -> x.substring(t + 1).toInt
         case ("feed", x) => feed += dec(x)
         case ("rm", x) => rm += dec(x)
-        case ("add", x) => adds += parseFileLine(x)
         case ("addz", x) => adds += parseSizedFileLine(x)
+        case ("add", _) => // the pre-size format: its files would vanish
+          throw new IllegalStateException(s"unsized record line: $l")
         case _ => () // forward compatibility: unknown keys ignored
       }
     }
     require(v > 0 && kind.nonEmpty, "record missing v/kind")
-    Record(v, kind, adds.result(), feed.result(), rm.result(), renamed,
-      dropFlat, ts, applied.result())
+    Record(v, kind, adds.result(), feed.result(), rm.result(), dropFlat, ts,
+      applied.result())
   }
 
   private def atomicWrite(target: Path, lines: Seq[String]): Unit = {
@@ -348,34 +331,45 @@ private[graft] object VersionLog {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Write version `v`'s record, then a checkpoint when `v` hits the
-    * cadence. Best-effort by contract: any failure is swallowed (the
-    * walk fallback stays correct) — a commit NEVER fails on log IO.
+  /** Write version `v`'s record — a commit step, so any failure
+    * propagates and fails the commit. Stamps the commit wall-clock
+    * (TIMESTAMP AS OF's address space), adjusted to stay strictly
+    * monotonic per table: a backwards host clock step must never record
+    * ts(v) <= ts(v-1) or timestamp→version resolution loses its one
+    * answer. The previous ts is a loose-record/newest-checkpoint read —
+    * O(1) at commit cadence.
     */
-  def append(path: String, rec: Record): Unit =
-    try {
-      // stamp the commit wall-clock (TIMESTAMP AS OF's address space),
-      // adjusted to stay strictly monotonic per table: a backwards host
-      // clock step must never record ts(v) <= ts(v-1) or
-      // timestamp→version resolution loses its one answer. The previous
-      // ts is a loose-record/newest-checkpoint read — O(1) at commit
-      // cadence.
-      val stamped =
-        if (rec.ts.nonEmpty) rec
-        else {
-          val prevTs =
-            if (rec.v <= 1) None
-            else recordOf(path, rec.v - 1).flatMap(_.ts)
-          rec.copy(ts = Some(math.max(clock(),
-            prevTs.map(_ + 1L).getOrElse(Long.MinValue))))
-        }
-      atomicWrite(recordPath(path, stamped.v), recordLines(stamped))
-      if (stamped.v % CheckpointEvery == 0) {
-        writeCheckpoint(path, stamped.v)
-        compactRecords(path)   // self-maintaining: see compactRecords
-        retireCheckpoints(path, stamped.v) // and retireCheckpoints
+  def append(path: String, rec: Record): Unit = {
+    val stamped =
+      if (rec.ts.nonEmpty) rec
+      else {
+        val prevTs =
+          if (rec.v <= 1) None else recordOf(path, rec.v - 1).flatMap(_.ts)
+        rec.copy(ts = Some(math.max(clock(),
+          prevTs.map(_ + 1L).getOrElse(Long.MinValue))))
       }
-    } catch { case _: Exception => () }
+    atomicWrite(recordPath(path, stamped.v), recordLines(stamped))
+  }
+
+  /** After version `v` is live: a checkpoint when `v` hits the cadence,
+    * then record compaction and checkpoint retirement. Best-effort —
+    * every record they fold is already written, so a failure here only
+    * leaves resolution on the loose records.
+    */
+  def maintain(path: String, v: Int): Unit =
+    if (v % CheckpointEvery == 0)
+      try {
+        writeCheckpoint(path, v)
+        compactRecords(path)
+        retireCheckpoints(path, v)
+      } catch { case _: Exception => () }
+
+  /** Roll back a crashed commit's log residue at version `v` (above the
+    * live one): its record and checkpoint. True when either existed.
+    */
+  def discard(path: String, v: Int): Boolean =
+    Files.deleteIfExists(recordPath(path, v)) |
+      Files.deleteIfExists(ckptPath(path, v))
 
   /** Version `v`'s record from its loose file or covering checkpoint;
     * None when it is missing, torn or retired.
@@ -385,48 +379,34 @@ private[graft] object VersionLog {
     catch { case _: Exception => None }
 
   /** Timestamp→version resolution with Delta's `TIMESTAMP AS OF`
-    * semantics: the LATEST commit whose stamp is ≤ `tsMillis`.
-    * Returns Left(reason) instead of guessing when the answer is not
-    * well-defined: `tsMillis` predates the first stamped commit (before
-    * table birth), or an UNSTAMPED commit (legacy record, unresolvable
-    * step) falls inside the candidate interval — a missing stamp there
-    * could be the true answer, so resolving around it would silently
-    * read the wrong state.
+    * semantics: the LATEST commit whose stamp is ≤ `tsMillis`, found by
+    * walking down from `current`. Every commit is stamped and the
+    * retained records run contiguously down from the live version, so
+    * the first stamp ≤ `tsMillis` is the answer. Returns Left(reason)
+    * instead of guessing when `tsMillis` lies below every retained
+    * stamp: before table birth, or below the retained log horizon.
     */
   def versionAt(path: String, tsMillis: Long,
       current: Int): Either[String, Int] = {
     val ctx = new LogCtx(path)
-    val stamps = (1 to current).map(v =>
-      v -> (try recordAt(path, v, ctx).flatMap(_.ts)
-            catch { case _: Exception => None }))
-    val known = stamps.collect { case (v, Some(t)) => v -> t }
-    val lo = known.filter(_._2 <= tsMillis).map(_._1).maxOption
-    val hi = known.filter(_._2 > tsMillis).map(_._1).minOption
-      .getOrElse(current + 1)
-    lo match {
-      case None =>
-        known.headOption match {
-          case Some((firstV, _)) if firstV > 1 =>
-            // commits below the first resolvable stamp exist but their
-            // records are gone (retired/compacted log) or unstamped —
-            // the Delta log-retention bound on TIMESTAMP AS OF
-            Left(s"timestamp $tsMillis is below the retained log " +
-              s"horizon — commits 1..${firstV - 1} carry no resolvable " +
-              "timestamp; address by version instead")
-          case Some((_, b)) =>
-            Left(s"timestamp $tsMillis predates the table's first " +
-              s"stamped commit ($b) — before table birth")
-          case None =>
-            Left(s"no commit of the table at $path carries a " +
-              "timestamp (legacy/unstamped log) — timestamp time " +
-              "travel needs stamped records; address by version instead")
-        }
-      case Some(l) if hi == l + 1 => Right(l)
-      case Some(l) =>
-        Left(s"commits ${l + 1}..${hi - 1} carry no timestamp " +
-          s"(legacy/unstamped records) — the state at $tsMillis is " +
-          "ambiguous; address by version instead")
+    var v = current
+    var oldest: Option[Long] = None // the lowest retained stamp seen
+    while (v >= 1) {
+      (try recordAt(path, v, ctx).flatMap(_.ts)
+       catch { case _: Exception => None }) match {
+        case Some(t) if t <= tsMillis => return Right(v)
+        case Some(t) => oldest = Some(t); v -= 1
+        case None =>
+          return Left(
+            if (v == current) s"the commit log of $path does not " +
+              s"resolve its live version $current"
+            else s"timestamp $tsMillis is below the retained log " +
+              s"horizon — commits 1..$v carry no resolvable timestamp; " +
+              "address by version instead")
+      }
     }
+    Left(s"timestamp $tsMillis predates the table's first commit " +
+      s"(${oldest.getOrElse(0L)}) — before table birth")
   }
 
   def readRecord(path: String, v: Int): Option[Record] =
@@ -446,20 +426,13 @@ private[graft] object VersionLog {
     * so a span resolution touches one file per K versions.
     */
   private def writeCheckpoint(path: String, v: Int): Unit = {
-    val live = resolveFiles(path, v).getOrElse {
-      // resolution gap (legacy tail, renamed links): fall back to the
-      // one walk — the checkpoint then repairs resolvability for
-      // everything after it
-      walkDataFiles(Paths.get(path, f"v_$v%05d"))
-    }
+    val live = resolveFiles(path, v).getOrElse(throw new IllegalStateException(
+      s"the commit log of $path does not resolve version $v"))
     val ctx = new LogCtx(path)
     val prev = ctx.latestAt(path, v - 1).map(_.v).getOrElse(0)
     val recs = ((prev + 1) to v).flatMap(i => recordAt(path, i, ctx))
     val lines = Seq(s"ckpt=$v", s"prev=$prev") ++
-      live.map { f =>
-        val (suffix, line) = sizedFileLine(f)
-        s"live$suffix=$line"
-      } ++
+      live.map(f => s"livez=${sizedFileLine(f)}") ++
       recs.flatMap(r => recordLines(r).map(l => s"R${r.v}:$l"))
     atomicWrite(ckptPath(path, v), lines)
   }
@@ -472,9 +445,8 @@ private[graft] object VersionLog {
     * retained checkpoint ([[recordAt]] serves it from there), and the
     * one-checkpoint margin means even a torn/corrupt NEWEST checkpoint
     * file degrades resolution only to the loose records that still
-    * cover its interval — the walk fallback stays the correctness
-    * baseline below that. Best-effort like all log IO; runs
-    * automatically after each checkpoint ([[append]]), so the steady
+    * cover its interval. Best-effort; runs automatically after each
+    * checkpoint ([[maintain]]), so the steady
     * state is ≤ ~2K loose records + O(commits/K) checkpoints.
     */
   def compactRecords(path: String): Int = {
@@ -501,7 +473,7 @@ private[graft] object VersionLog {
     * retirement). The default is generous relative to every log
     * consumer's span: feed-driven IVM advances run at serving cadence
     * (spans of 1–10 commits near head), and a consumer that HAS fallen
-    * further behind only degrades to the walk fallback, never to a
+    * further behind only degrades to the snapshot diff, never to a
     * wrong answer. 2,048 commits ≈ 3 weeks of minutely triggers —
     * the Delta log-retention default's order of magnitude.
     */
@@ -509,17 +481,17 @@ private[graft] object VersionLog {
 
   /** RETIRE checkpoints older than the retention horizon. Correctness
     * contract: log resolution into a retired interval simply fails
-    * (recordAt/resolveFiles/resolveSteps return None) and every caller
-    * falls back to the directory walk that remains the baseline —
-    * VersionLogSpec pins resolution ≡ walk across a retired interval.
-    * What retirement DOES forfeit below the horizon is the log-only
-    * metadata: per-file stats for time-traveled reads (they re-census)
-    * and commit timestamps (timestamp→version resolution refuses below
+    * (recordAt/resolveFiles/resolveSteps return None, never a wrong
+    * answer); the live version always resolves, from the two newest
+    * checkpoints that never retire. What retirement forfeits below the
+    * horizon is the log-only metadata: per-file stats for time-traveled
+    * reads, CDF spans off the log (they take the snapshot diff) and
+    * commit timestamps (timestamp→version resolution refuses below
     * the horizon and says to address by version — Delta's log-retention
     * bound on `TIMESTAMP AS OF`, made explicit). The newest two
     * checkpoints never retire regardless of horizon — compactRecords'
     * torn-newest-checkpoint margin depends on the second-newest
-    * existing. Best-effort like all log IO.
+    * existing. Best-effort.
     */
   def retireCheckpoints(path: String, current: Int): Int = {
     val retain = sys.props.get("graft.log.retainCommits")
@@ -534,28 +506,6 @@ private[graft] object VersionLog {
           Files.deleteIfExists(ckptPath(path, v))) n += 1
     } catch { case _: Exception => () }
     n
-  }
-
-  /** Data files (rel path + stats if the log knows them) of a version
-    * dir by WALK — the correctness baseline the spec compares the
-    * manifest against. No stats (footers are not reopened here).
-    */
-  def walkDataFiles(verDir: Path): Seq[FileEntry] = {
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(verDir)) return Nil
-    val walk = Files.walk(verDir)
-    try walk.iterator().asScala
-      .filter { p =>
-        val rel = verDir.relativize(p)
-        val inFeed = rel.getNameCount > 1 &&
-          rel.getName(0).toString == "_changes"
-        Files.isRegularFile(p) && !inFeed &&
-          p.getFileName.toString.endsWith(".parquet")
-      }
-      .map(p => FileEntry(verDir.relativize(p).toString, Map.empty,
-        try Some(Files.size(p)) catch { case _: Exception => None }))
-      .toSeq.sortBy(_.rel)
-    finally walk.close()
   }
 
   private final case class Checkpoint(v: Int, prev: Int,
@@ -614,7 +564,8 @@ private[graft] object VersionLog {
       val recLines = scala.collection.mutable.Map[Int, Vector[String]]()
       lines.foreach { l =>
         if (l.startsWith("prev=")) prev = l.substring(5).toInt
-        else if (l.startsWith("live=")) live += parseFileLine(l.substring(5))
+        else if (l.startsWith("live=")) // the pre-size format
+          throw new IllegalStateException(s"unsized checkpoint line: $l")
         else if (l.startsWith("livez=")) live +=
           parseSizedFileLine(l.substring(6))
         else if (l.startsWith("R")) {
@@ -647,8 +598,8 @@ private[graft] object VersionLog {
   /** The smallest `h` in [fromV, toV] such that EVERY step in (h, toV]
     * has a resolvable record — the hybrid-CDF split point: a span
     * consumer further behind than the log-retention horizon serves the
-    * (h, toV] suffix from the grouped log path and pays the walk/diff
-    * only for the retired (fromV, h] prefix. `toV` (an empty suffix)
+    * (h, toV] suffix from the grouped log path and pays the snapshot
+    * diff only for the retired (fromV, h] prefix. `toV` (an empty suffix)
     * when nothing above `fromV` resolves; `fromV` when everything does.
     * One `_log` listing, memoized checkpoint parses.
     */
@@ -663,8 +614,8 @@ private[graft] object VersionLog {
   /** Records for every step in (fromV, toV], resolved through
     * checkpoints first (each covers its (prev, ckpt] interval in ONE
     * file read — O(span/K) total) with loose records filling the tails.
-    * None as soon as ONE step is unresolvable — callers fall back to
-    * the walk-based paths.
+    * None as soon as ONE step is unresolvable (retired below the
+    * retention horizon).
     */
   def resolveSteps(path: String, fromV: Int, toV: Int): Option[Seq[Record]] =
     try {
@@ -697,8 +648,8 @@ private[graft] object VersionLog {
 
   /** The full data-file set (with stats) of version `v`, resolved from
     * the log alone: latest checkpoint ≤ v, then records applied forward.
-    * None when a record is missing, a rename poisons the resolution, or
-    * no checkpoint/record chain reaches back to a full set.
+    * None when a record is missing (retired, torn) or no
+    * checkpoint/record chain reaches back to a full set.
     */
   def resolveFiles(path: String, v: Int): Option[Seq[FileEntry]] =
     try {
@@ -720,7 +671,6 @@ private[graft] object VersionLog {
       var files: Option[Map[String, FileEntry]] =
         base0.map(_.map(f => f.rel -> f).toMap)
       recs.foreach { r =>
-        if (r.renamed) return None
         def noFlat(m: Map[String, FileEntry]): Map[String, FileEntry] =
           if (!r.dropRootFlat) m
           else m.filterNot { case (rel, _) =>

@@ -1022,9 +1022,7 @@ object NorthStarQueries {
     tbl.compact(s, 16, sortCols = Seq("id"))
     val bounds = Seq(graft.io.ColumnBound("id",
       Some(StatsPruneLo), Some(StatsPruneHi)))
-    val (kept, total) = tbl.prunedFileCensus(bounds).getOrElse(
-      sys.error("q118: commit log did not resolve — stats skipping " +
-        "silently degraded to the full file list"))
+    val (kept, total) = tbl.prunedFileCensus(bounds)
     require(kept < total,
       s"q118: range-clustered stats must prune (kept $kept of $total)")
     // PLANNER-AUTOMATIC since round 14: the plain read's FileIndex hands
@@ -1062,8 +1060,7 @@ object NorthStarQueries {
     tbl.overwrite(base)
     tbl.compact(s, 16, sortCols = Seq("id"))
     val (kept, total) = tbl.prunedFileCensus(Seq(graft.io.ColumnBound("id",
-      Some(StatsPruneLo), Some(StatsPruneHi)))).getOrElse(
-      sys.error("q122: commit log did not resolve"))
+      Some(StatsPruneLo), Some(StatsPruneHi))))
     require(kept < total,
       s"q122: range-clustered stats must prune (kept $kept of $total)")
     graft.io.Catalog.ensureDatabase(s, "graft_q122")

@@ -149,8 +149,8 @@ object PackStream {
     * steady-state cost is a pointer read and a record read). Behind →
     * repack exactly the buckets the unapplied log versions touched
     * (insert-only log, so its CDF between the two versions IS the late
-    * docs). A packed table or marker that does not exist yet
-    * (first-trigger crash windows, a lost log record) falls back to
+    * docs). A packed table or marker that does not exist yet (the
+    * first-trigger crash window) falls back to
     * repacking every bucket in the log — the one full repack, after
     * which the marker exists.
     */

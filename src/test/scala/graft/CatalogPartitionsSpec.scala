@@ -69,21 +69,20 @@ class CatalogPartitionsSpec extends AnyFunSuite {
       .exists { case (id, st, _) => id == 2L && st == null })
   }
 
-  test("an unresolvable commit log falls back to recoverPartitions " +
-      "with identical SQL visibility") {
+  test("a commit log that cannot resolve the live version fails " +
+      "registration loudly, naming the table") {
     val dir = java.nio.file.Files.createTempDirectory("graft_catparts_f")
     val t = new ParquetTable(s"$dir/t", partitionColumns = Seq("status"))
     t.overwrite(Seq((1L, "O", 10L), (2L, "F", 20L))
       .toDF("id", "status", "cents"))
-    // retire the log: resolution then fails and registerTable must take
-    // the recoverPartitions route (same catalog state, listed not read)
-    val log = java.nio.file.Paths.get(s"$dir/t/_log")
-    val hidden = java.nio.file.Paths.get(s"$dir/t/_log_hidden")
-    assert(java.nio.file.Files.isDirectory(log))
-    java.nio.file.Files.move(log, hidden)
+    // the live version's record is gone: registration must not list the
+    // directory in its place
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(s"$dir/t/_log/r_00001.txt"))
     Catalog.ensureDatabase(spark, "graft_catparts_f")
-    Catalog.registerTable(spark, "graft_catparts_f", "t", t)
-    assert(sqlRows("graft_catparts_f.t") == tableRows(t))
-    java.nio.file.Files.move(hidden, log)
+    val e = intercept[IllegalStateException] {
+      Catalog.registerTable(spark, "graft_catparts_f", "t", t)
+    }
+    assert(e.getMessage.contains(t.path) && e.getMessage.contains("v_00001"))
   }
 }

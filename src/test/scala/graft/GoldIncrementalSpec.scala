@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gold.{GoldBuilds, GoldIncremental}
+import graft.io.LogOracle
 import graft.pipeline.Warehouse
 
 /** Round-8 verdict item 3: the CDF-driven maintenance loop wired to the
@@ -83,7 +84,8 @@ class GoldIncrementalSpec extends AnyFunSuite {
 
   test("incremental maintenance of the five reference gold tables " +
       "equals the batch rebuild across an insert/update/delete commit " +
-      "mix, absorbs replays, and survives a lost marker") {
+      "mix, absorbs replays, and leaves no window between data and " +
+      "marker") {
     val root = java.nio.file.Files.createTempDirectory("graft_goldinc")
     val wh = new Warehouse(s"$root/inc")
     val whB = new Warehouse(s"$root/batch")
@@ -146,18 +148,31 @@ class GoldIncrementalSpec extends AnyFunSuite {
     new GoldBuilds(spark, whB).buildAll()
     assertMatchesBatch(wh, whB)
 
-    // ---- lost marker: the live gold version's log record is gone ----
-    // data and marker publish in one commit, so there is no window
-    // between them; a missing (torn, retired) record reads as no marker
-    // → the next advance is the safe full rebuild (never a double-
-    // applied delta), and its commit carries the marker again
+    // ---- no window: data and marker publish in one commit ----
+    // an advance killed before its pointer swap — after staging, after
+    // the rename or after the record — leaves the old data AND the old
+    // marker (never new data under an old marker, which the next advance
+    // would double-apply); the next advance converges
+    val cust4 = customersDf((1L, "affiliate", "regular", "2023-05-01"),
+      (2L, "affiliate", "VIP", "2023-06-01"),
+      (4L, "individual", "VIP", "2023-08-01"),
+      (5L, "individual", "regular", "2023-09-01"))
+    wh.silverByName("customers").overwrite(cust4)
+    whB.silverByName("customers").overwrite(cust4)
+    new GoldBuilds(spark, whB).buildAll()
     val g = wh.gold("customer_breakdown")
-    java.nio.file.Files.delete(java.nio.file.Paths.get(g.path, "_log",
-      f"r_${g.version}%05d.txt"))
-    assert(g.applied.isEmpty)
-    inc.customerBreakdown()
-    assert(g.applied == Map("customers" ->
-      wh.silverByName("customers").version), "the marker must be back")
+    val (gv, marker, data) =
+      (g.version, g.applied, TestSpark.rows(g.read(spark)))
+    assert(marker("customers") < wh.silverByName("customers").version)
+    Seq(LogOracle.Staged, LogOracle.Renamed, LogOracle.Recorded)
+      .foreach { crash =>
+        LogOracle.crashBeforeSwap(g, crash)(inc.customerBreakdown())
+        assert(g.version == gv && g.applied == marker &&
+          TestSpark.rows(g.read(spark)) == data, crash)
+      }
+    inc.advanceAll()
+    assert(g.version == gv + 1 && g.applied == Map("customers" ->
+      wh.silverByName("customers").version), "the marker must be current")
     assertMatchesBatch(wh, whB)
   }
 

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.ParquetTable
+import graft.io.{LogOracle, ParquetTable}
 
 /** The deployment shape of optimistic concurrency is two separate
   * PROCESSES racing a commit — the in-JVM monitor half of
@@ -82,26 +82,18 @@ class OccProcessSpec extends AnyFunSuite {
               .getOrElse("<none>")).mkString("\n"))
 
       val t = new ParquetTable(tablePath)
-      // both contenders reserve BEFORE either swaps, so the winner's
-      // committed number may be 2 or 3 (the loser's reservation consumes
-      // a number it then cleans up) — version numbers may legitimately
-      // gap under contention, like any reserve-then-commit scheme
-      assert(t.version == 2 || t.version == 3,
+      // versions are numbered at commit, so the one winner is v2
+      assert(t.version == 2,
         s"exactly one commit must have landed, got v${t.version}")
       val winnerTag = if (pa.exitValue() == 0) "alpha" else "beta"
       val rows = t.read(spark).collect().map(r => (r.getString(0), r.getInt(1)))
       assert(rows.toSeq == Seq((winnerTag, 1)),
         s"table must hold the winner's payload, got ${rows.toSeq}")
       // no litter: base + the winner's committed dir only — the loser's
-      // staged reservation must be gone, and nothing staging-marked
-      val versionDirs = Files.list(Paths.get(tablePath)).toArray.toSeq
-        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
-        .filter(_.startsWith("v_")).sorted
-      assert(versionDirs == Seq("v_00001", f"v_${t.version}%05d"),
-        s"loser must clean its staged dir: $versionDirs")
-      assert(!Files.exists(
-        Paths.get(tablePath, f"v_${t.version}%05d", "_staging")),
-        "the committed version must not stay staging-marked")
+      // staging dir must be gone
+      assert(LogOracle.versionDirs(t) == Seq("v_00001", "v_00002"))
+      assert(LogOracle.stageDirs(t).isEmpty,
+        s"loser must clean its staging dir: ${LogOracle.stageDirs(t)}")
     } finally {
       pa.destroyForcibly(); pb.destroyForcibly()
     }
@@ -149,6 +141,47 @@ class OccProcessSpec extends AnyFunSuite {
       pa.destroyForcibly(); pb.destroyForcibly()
     }
   }
+
+  test("a contender SIGKILLed while staging leaves only its staging " +
+      "dir: readers see the old version, the next commit converges, " +
+      "vacuum keeps the young dir and collects it once aged") {
+    val dir = Files.createTempDirectory("graft_occ_kill")
+    val tablePath = s"$dir/t"
+    val t = new ParquetTable(tablePath)
+    t.overwrite(Seq(("base", 0)).toDF("writer", "n"))
+    val barrier = s"$dir/barrier"
+    val p = spawn("victim", tablePath, 1, barrier, dir, op = "stall")
+    try {
+      val deadline = System.nanoTime() + 180L * 1000000000L
+      def waitFor(f: String): Unit =
+        while (!Files.exists(Paths.get(f))) {
+          assert(System.nanoTime() < deadline, s"timed out waiting for $f")
+          Thread.sleep(50)
+        }
+      waitFor(s"$barrier.ready.victim")
+      Files.writeString(Paths.get(s"$barrier.go"), "")
+      // the contender's write task signals from inside the stage
+      waitFor(s"$barrier.staging.victim")
+      p.destroyForcibly() // SIGKILL on this platform
+      assert(p.waitFor(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(LogOracle.stageDirs(t).size == 1,
+        "the killed writer's staging dir stays behind")
+      assert(t.version == 1 && LogOracle.versionDirs(t) == Seq("v_00001"))
+      assert(t.read(spark).collect().map(_.getString(0)).toSeq == Seq("base"))
+      t.overwrite(Seq(("next", 2)).toDF("writer", "n"))
+      assert(t.version == 2)
+      assert(LogOracle.resolvedLive(t).contains(LogOracle.walkedLive(t)))
+      assert(t.read(spark).collect().map(_.getString(0)).toSeq == Seq("next"))
+      t.vacuum()
+      val orphan = LogOracle.stageDirs(t)
+      assert(orphan.size == 1, "a young staging dir survives vacuum")
+      Files.setLastModifiedTime(orphan.head,
+        java.nio.file.attribute.FileTime.fromMillis(
+          System.currentTimeMillis() - 48L * 3600 * 1000))
+      t.vacuum()
+      assert(LogOracle.stageDirs(t).isEmpty && t.read(spark).count() == 1)
+    } finally p.destroyForcibly()
+  }
 }
 
 /** The spawned contender: barrier-sync, then one conditional commit.
@@ -176,6 +209,14 @@ object OccContender {
       try {
         op match {
           case "append" => new ParquetTable(tablePath).appendVersion(payload)
+          case "stall" =>
+            // a write task that signals it is staging, then never ends
+            val stall = org.apache.spark.sql.functions.udf { (n: Int) =>
+              Files.writeString(Paths.get(s"$barrier.staging.$tag"), "")
+              Thread.sleep(600000L); n
+            }.asNondeterministic()
+            new ParquetTable(tablePath).overwrite(payload.repartition(1)
+              .withColumn("n", stall(org.apache.spark.sql.functions.col("n"))))
           case _ => new ParquetTable(tablePath).overwriteIf(payload, expected.toInt)
         }
         0

@@ -349,7 +349,8 @@ class PipelineSpec extends AnyFunSuite {
       .forall(n => w.table(s"bronze_$n").exists))
     assert(!w.table("bronze_items").exists)
     val walk = Files.walk(java.nio.file.Paths.get(w.root))
-    try assert(!walk.iterator().asScala.exists(_.getFileName.toString == "_staging"))
+    try assert(!walk.iterator().asScala.exists(_.getFileName.toString
+      .startsWith("_stage_")))
     finally walk.close()
   }
 

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.io.ParquetTable
+import graft.io.{LogOracle, ParquetTable}
 import graft.streaming.{PackStream, ReplayGate}
 
 /** Laws of the Bloom-gated replay probe and PackStream's self-healing
@@ -254,18 +254,31 @@ class ReplayGateSpec extends AnyFunSuite {
     PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
     assert(packed.version == v, "current tables must not be rewritten")
     // the marker rides in the packed commit's record, so a repack and
-    // its marker cannot come apart; a LOST record (no marker) falls back
-    // to the full repack — idempotent on content, marker back
-    Files.delete(Paths.get(packed.path, "_log",
-      f"r_${packed.version}%05d.txt"))
-    assert(PackStream.appliedLogVersion(packed).isEmpty)
-    PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
-    val regot = packed.read(spark)
+    // its marker cannot come apart: a repack killed before its pointer
+    // swap (staged, renamed or recorded) leaves the old data AND the old
+    // marker, and the next recovery converges
+    log.appendVersion(docsDf(Seq(10L, 40L)))
+    def packedRows = packed.read(spark)
       .select("doc_id", "bucket", "seq", "n_tokens").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
       .toSet
-    assert(regot == ref)
+    val (pv, marker, data) =
+      (packed.version, PackStream.appliedLogVersion(packed), packedRows)
+    Seq(LogOracle.Staged, LogOracle.Renamed, LogOracle.Recorded)
+      .foreach { crash =>
+        LogOracle.crashBeforeSwap(packed, crash)(PackStream.recover(spark,
+          log, packed, budget = 40, bucketSize = 16))
+        assert(packed.version == pv && packedRows == data &&
+          PackStream.appliedLogVersion(packed) == marker, crash)
+      }
+    PackStream.recover(spark, log, packed, budget = 40, bucketSize = 16)
+    assert(packed.version == pv + 1)
     assert(PackStream.appliedLogVersion(packed).contains(log.version))
+    val ref2 = graft.northstar.SeqPack.packGreedy(
+        log.read(spark), "doc_id", "text", budget = 40, bucketSize = 16)
+      .collect().map(p => (p.doc_id, p.bucket, p.seq, p.n_tokens)).toSet
+    assert(packedRows == ref2,
+      "the converged pack must equal the full batch repack")
   }
 
   test("PackStream recovery covers the first-trigger crash window (log " +

@@ -126,25 +126,26 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("vacuum ages out a hard-killed writer's orphaned staging dir but " +
-      "protects a recent in-flight reservation") {
+      "protects a recent in-flight one") {
     val dir = Files.createTempDirectory("graft_tbl_vac").toString
     val t = new ParquetTable(s"$dir/t")
     t.overwrite(Seq((1, "a")).toDF("id", "v"))
     t.overwrite(Seq((2, "b")).toDF("id", "v"))
     t.overwrite(Seq((3, "c")).toDF("id", "v")) // live = v3
-    // simulate a writer hard-killed mid-stage at v2's slot being already
-    // superseded: a staging-marked dir BELOW the live version
-    val orphan = java.nio.file.Paths.get(s"$dir/t", "v_00002", "_staging")
-    Files.writeString(orphan, "")
-    // a recent marker is an in-flight writer — protected
+    // a writer hard-killed mid-stage leaves its private staging dir
+    val orphan = java.nio.file.Paths.get(s"$dir/t", "_stage_killed")
+    Files.createDirectories(orphan.resolve("k=1"))
+    Files.writeString(orphan.resolve("k=1").resolve("part-0.parquet"), "")
+    // a recent one may be an in-flight writer — protected
     t.vacuum()
-    assert(Files.exists(orphan.getParent), "recent staging dir must survive")
-    // age the marker past the TTL — now it is residue and is collected
+    assert(Files.exists(orphan), "recent staging dir must survive")
+    assert(graft.io.LogOracle.versionDirs(t) == Seq("v_00003"))
+    // age it past the TTL — now it is residue and is collected
     Files.setLastModifiedTime(orphan,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 48L * 3600 * 1000))
     t.vacuum()
-    assert(!Files.exists(orphan.getParent),
+    assert(!Files.exists(orphan),
       "aged-out orphaned staging dir must be collected")
     assert(t.read(spark).count() == 1) // live version untouched
   }
@@ -238,7 +239,8 @@ class TablesSpec extends AnyFunSuite {
       assert(Files.readString(root.resolve("_current")) == pointer, kind)
       assert(t.version == v, kind)
       val above = names(root).filter(n =>
-        n.startsWith("v_") && n.drop(2).toInt > v)
+        (n.startsWith("v_") && n.drop(2).toInt > v) ||
+          n.startsWith("_stage_"))
       assert(above.isEmpty, s"$kind left staged dir(s) $above")
       assert(records == recs, s"$kind wrote a log record")
       assert(TestSpark.rows(t.read(spark)) == rows, kind)
@@ -686,7 +688,7 @@ class TablesSpec extends AnyFunSuite {
     // recorded in the commit log at write time
     t.compact(spark, 8, sortCols = Seq("id"))
     val bounds = Seq(ColumnBound("id", Some(2500L), Some(2600L)))
-    val (kept, total) = t.prunedFileCensus(bounds).get
+    val (kept, total) = t.prunedFileCensus(bounds)
     assert(total == 8 && kept < total,
       s"stats must prune disjoint files (kept $kept of $total)")
     // the pruned scan reads exactly the surviving files…
@@ -699,7 +701,7 @@ class TablesSpec extends AnyFunSuite {
       got.exceptAll(want).isEmpty)
     // a bound on a column with no stats never prunes (absent ≠ empty)
     assert(t.prunedFileCensus(
-      Seq(ColumnBound("nope", Some(1L), None))).get._1 == total)
+      Seq(ColumnBound("nope", Some(1L), None)))._1 == total)
   }
 
   test("vacuumKeepingFeeds: pre-horizon versions reclaimed entirely, " +
@@ -771,8 +773,7 @@ class TablesSpec extends AnyFunSuite {
     // works immediately (no footer re-opens needed to plan)
     val census = t.prunedFileCensus(
       Seq(ColumnBound("id", Some(100L), Some(200L))))
-    assert(census.exists { case (kept, total) =>
-      total > 0 && kept == 0 },
+    assert(census._1 == 0 && census._2 > 0,
       s"restored version must carry prunable stats, census $census")
     // restore of the live version is a no-op
     val v = t.version
@@ -815,7 +816,7 @@ class TablesSpec extends AnyFunSuite {
     // stats ride: the clone prunes from its first read
     val census = dst.prunedFileCensus(
       Seq(ColumnBound("id", Some(0L), Some(10L))))
-    assert(census.exists { case (kept, total) => kept < total },
+    assert(census._1 < census._2,
       s"clone must carry the source's stats, census $census")
     // independence: the clone evolves without touching the source…
     dst.appendVersion(Seq((999L, "new")).toDF("id", "v"))
@@ -932,8 +933,9 @@ class TablesSpec extends AnyFunSuite {
       }
       assert(gone.getMessage.contains("vacuumed"))
 
-      // an unstamped record inside the candidate interval makes the
-      // answer ambiguous — refuse, never guess around it
+      // a record without a stamp (damaged: every commit is stamped)
+      // bounds the retained stamps like the retention horizon — refuse
+      // below it, never guess around it
       val dir2 = Files.createTempDirectory("graft_ts2").toString
       val u = new ParquetTable(s"$dir2/t")
       now = 100L
@@ -942,26 +944,20 @@ class TablesSpec extends AnyFunSuite {
       u.appendVersion(Seq((2L, "b")).toDF("id", "v")) // v2 @200
       now = 300L
       u.appendVersion(Seq((3L, "c")).toDF("id", "v")) // v3 @300
-      // strip v2's stamp (simulates a legacy/pre-timestamp record)
+      // strip v2's stamp
       val r2 = java.nio.file.Paths.get(s"$dir2/t/_log/r_00002.txt")
       val stripped = java.nio.file.Files.readString(r2).linesIterator
         .filterNot(_.startsWith("ts=")).mkString("\n")
       java.nio.file.Files.writeString(r2, stripped)
-      val amb = intercept[IllegalArgumentException] {
-        u.versionAtTimestamp(250L) // the answer could be v2 — unknown
+      Seq(250L, 150L, 50L).foreach { ts =>
+        // the answer could be v2 (or below it): unknown
+        val below = intercept[IllegalArgumentException] {
+          u.versionAtTimestamp(ts)
+        }
+        assert(below.getMessage.contains("address by version"), ts)
       }
-      assert(amb.getMessage.contains("ambiguous"))
-      val amb2 = intercept[IllegalArgumentException] {
-        u.versionAtTimestamp(150L) // v2's unknown stamp straddles 150 too
-      }
-      assert(amb2.getMessage.contains("ambiguous"))
-      // but a boundary the unstamped record cannot affect still resolves
+      // but a boundary above the unstamped record still resolves
       assert(u.versionAtTimestamp(300L) == 3)
-      // and before-birth refusal is still the birth message, not ambiguity
-      val birth2 = intercept[IllegalArgumentException] {
-        u.versionAtTimestamp(50L)
-      }
-      assert(birth2.getMessage.contains("birth"))
     }
   }
 

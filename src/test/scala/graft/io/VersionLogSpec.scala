@@ -7,10 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The commit log + checkpoint manifest ([[VersionLog]]): manifest ≡
-  * walk, checkpoint coverage, torn-file safety. In-package so the
-  * private[io] resolution API is testable directly; the public-surface
-  * laws (CDF off the log, pruned reads, feed-retaining vacuum) live in
-  * TablesSpec.
+  * walk ([[LogOracle]]), checkpoint coverage, torn-file safety.
+  * In-package so the private[io] resolution API is testable directly;
+  * the public-surface laws (CDF off the log, pruned reads,
+  * feed-retaining vacuum) live in TablesSpec.
   */
 class VersionLogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -24,13 +24,11 @@ class VersionLogSpec extends AnyFunSuite {
     t.appendVersion(Seq((3L, "c", 2L)).toDF("id", "v", "bucket"))
     t.replacePartitions(Seq((9L, "B", 1L)).toDF("id", "v", "bucket"))
     def check(): Unit = {
-      val v = t.version
-      val resolved = VersionLog.resolveFiles(s"$dir/t", v)
-        .map(_.map(_.rel).toSet)
-      val walked = VersionLog.walkDataFiles(
-        Paths.get(s"$dir/t", f"v_$v%05d")).map(_.rel).toSet
+      val (resolved, walked) = (LogOracle.resolvedLive(t),
+        LogOracle.walkedLive(t))
       assert(resolved.contains(walked),
-        s"log resolution $resolved must equal the walk $walked at v$v")
+        s"log resolution $resolved must equal the walk $walked " +
+          s"at v${t.version}")
     }
     check()
     // drive past the checkpoint cadence and re-verify — the live set
@@ -73,7 +71,7 @@ class VersionLogSpec extends AnyFunSuite {
 
   test("maintenance markers round-trip through a loose record, a " +
       "checkpoint and record compaction; a record without one renders " +
-      "exactly the pre-marker lines") {
+      "no marker line") {
     val p = Files.createTempDirectory("graft_vlog").toString + "/mk"
     // every third commit carries no marker; keys need URL-encoding
     def marker(v: Int) =
@@ -82,9 +80,9 @@ class VersionLogSpec extends AnyFunSuite {
     val n = 2 * VersionLog.CheckpointEvery + 1
     (1 to n).foreach { v =>
       VersionLog.append(p, VersionLog.Record(v, "overwrite",
-        Seq(VersionLog.FileEntry(s"part-$v.parquet", Map.empty,
-          Some(v.toLong))), Nil, Nil, renamed = false,
-        ts = Some(1000L + v), applied = marker(v)))
+        Seq(VersionLog.FileEntry(s"part-$v.parquet", Map.empty, v.toLong)),
+        Nil, Nil, ts = Some(1000L + v), applied = marker(v)))
+      VersionLog.maintain(p, v)
     }
     def loose(v: Int) = Paths.get(p, "_log", f"r_$v%05d.txt")
     // the first checkpoint's interval was compacted away: its markers
@@ -95,32 +93,47 @@ class VersionLogSpec extends AnyFunSuite {
         s"v$v's marker must round-trip")
     }
     assert(Files.readString(loose(n)) == Seq(s"v=$n", "kind=overwrite",
-      "renamed=0", "dropflat=0", s"ts=${1000 + n}",
+      "dropflat=0", s"ts=${1000 + n}",
       s"addz=$n\tpart-$n.parquet").mkString("\n"),
-      "a record without a marker must render exactly as before markers")
+      "a record without a marker renders no applied= line")
     assert(Files.readString(loose(n - 1)).split("\n").toSeq
       .filter(_.startsWith("applied=")) ==
       Seq(s"applied=a+b%3Dc%09d\t${(n - 1) * 10}",
         s"applied=orders\t${n - 1}"))
   }
 
-  test("torn-log safety: a corrupted record file degrades resolution " +
-      "to None while changesBetween stays exact off the walk fallback") {
+  test("torn-log safety: a corrupted live record fails resolution " +
+      "and every live-version reader loudly, naming the table; CDF takes " +
+      "the snapshot diff; a corrupted checkpoint degrades to the loose " +
+      "records") {
     import org.apache.spark.sql.functions.lit
     val dir = Files.createTempDirectory("graft_vlog").toString
-    val t = new ParquetTable(s"$dir/torn")
-    val v1 = Seq((1L, "a")).toDF("id", "v")
+    val t = new ParquetTable(s"$dir/torn", partitionColumns = Seq("k"))
+    val v1 = Seq((1L, "a")).toDF("id", "k")
     t.overwriteWithChanges(v1, v1.withColumn("_change_type", lit("insert")))
     t.overwriteWithChanges(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-      Seq((2L, "b", "insert")).toDF("id", "v", "_change_type"))
-    // corrupt v2's record (torn write / bit rot)
+      Seq((1L, "a"), (2L, "b")).toDF("id", "k"),
+      Seq((2L, "b", "insert")).toDF("id", "k", "_change_type"))
+    // corrupt v2's record (bit rot: the atomic rename rules out a torn
+    // write)
     Files.writeString(Paths.get(s"$dir/torn/_log/r_00002.txt"),
       "v=2\nkind=")
     assert(VersionLog.resolveSteps(s"$dir/torn", 1, 2).isEmpty,
       "a malformed record must fail resolution, not parse partially")
     assert(VersionLog.resolveFiles(s"$dir/torn", 2).isEmpty)
-    // the CDF answer is unchanged — served by the persisted-feed walk
+    ParquetTable.invalidateResolved(t.path)
+    val readers: Seq[(String, () => Any)] = Seq(
+      "read" -> (() => t.read(spark)),
+      "readPruned" -> (() => t.readPruned(spark, Nil)),
+      "prunedFileCensus" -> (() => t.prunedFileCensus(Nil)),
+      "registerTable" -> (() => Catalog.registerTable(spark, "default",
+        "graft_vlog_torn", t)))
+    try readers.foreach { case (name, run) =>
+      val e = intercept[IllegalStateException](run())
+      assert(e.getMessage.contains(t.path) &&
+        e.getMessage.contains("v_00002"), s"$name: ${e.getMessage}")
+    } finally spark.sql("DROP TABLE IF EXISTS default.graft_vlog_torn")
+    // the CDF answer is unchanged — served by the snapshot diff
     TestSpark.assertSameRows(t.changesBetween(spark, 1, 2),
       Seq(Seq(2L, "b", "insert")))
     // a corrupted checkpoint likewise degrades, never corrupts
@@ -133,10 +146,17 @@ class VersionLogSpec extends AnyFunSuite {
       .find(_.getFileName.toString.startsWith("ckpt_")).get
     Files.writeString(ck, "ckpt=999\nR1:v=garbage")
     // resolution survives through loose records
-    val live = VersionLog.resolveFiles(s"$dir/ck", t2.version)
-    val walked = VersionLog.walkDataFiles(
-      Paths.get(s"$dir/ck", f"v_${t2.version}%05d")).map(_.rel).toSet
-    assert(live.map(_.map(_.rel).toSet).contains(walked))
+    assert(LogOracle.resolvedLive(t2).contains(LogOracle.walkedLive(t2)))
+  }
+
+  test("the pre-size record format is refused, never read as a record " +
+      "without files") {
+    val p = Files.createTempDirectory("graft_vlog").toString + "/old"
+    Files.createDirectories(Paths.get(p, "_log"))
+    Files.writeString(Paths.get(p, "_log", "r_00001.txt"),
+      "v=1\nkind=overwrite\nts=5\nadd=part-0.parquet")
+    assert(VersionLog.recordOf(p, 1).isEmpty)
+    assert(VersionLog.resolveFiles(p, 1).isEmpty)
   }
 
   test("record compaction: loose records below the second-newest " +
@@ -168,9 +188,9 @@ class VersionLogSpec extends AnyFunSuite {
 
     // live resolution ≡ walk
     def filesEqWalk(v: Int): Unit = {
-      val resolved = VersionLog.resolveFiles(p, v).map(_.map(_.rel).toSet)
-      val walked = VersionLog.walkDataFiles(
-        Paths.get(p, f"v_$v%05d")).map(_.rel).toSet
+      val resolved = VersionLog.resolveFiles(p, v)
+        .map(_.map(f => f.rel -> f.size).toMap)
+      val walked = LogOracle.walkDataFiles(Paths.get(p, f"v_$v%05d"))
       assert(resolved.contains(walked),
         s"v$v: log $resolved must equal walk $walked")
     }
@@ -193,7 +213,7 @@ class VersionLogSpec extends AnyFunSuite {
   }
 
   test("checkpoint retirement: checkpoints below the retention horizon " +
-      "retire, resolution ≡ walk across the retired interval, near-head " +
+      "retire, reads into the retired interval stay exact, near-head " +
       "stays log-served, timestamp travel below the horizon refuses") {
     val prevRetain = sys.props.get("graft.log.retainCommits")
     try {
@@ -218,11 +238,12 @@ class VersionLogSpec extends AnyFunSuite {
       // resolution fails CLEANLY (None, not a wrong answer)...
       assert(VersionLog.resolveFiles(p, 10).isEmpty,
         "a version inside the retired interval must not log-resolve")
-      // ...and every public surface falls back to the walk with exact
-      // results: time travel INTO the retired interval
+      // ...and every public surface stays exact: time travel INTO the
+      // retired interval reads the version dir
       assert(t.readVersion(spark, 10).collect().map(_.getLong(0)).toSet ==
         (1L to 10L).toSet)
-      // CDF entirely within and across the retired interval
+      // CDF entirely within (the snapshot diff) and across (the hybrid)
+      // the retired interval
       val inRet = t.changesBetween(spark, 2, 12)
       assert(inRet.count() == 10L && inRet.filter(
         org.apache.spark.sql.functions.col("_change_type") =!= "insert")
@@ -254,9 +275,8 @@ class VersionLogSpec extends AnyFunSuite {
   }
 
   test("hybrid CDF across the retirement horizon: the log-covered " +
-      "suffix is served from records, only the retired prefix walks — " +
-      "hybrid ≡ full walk ≡ snapshot patch law on a mixed " +
-      "feed/append span") {
+      "suffix is served from records, only the retired prefix diffs " +
+      "snapshots — hybrid ≡ snapshot diff on a mixed feed/append span") {
     import org.apache.spark.sql.functions.col
     val prevRetain = sys.props.get("graft.log.retainCommits")
     try {
@@ -309,18 +329,16 @@ class VersionLogSpec extends AnyFunSuite {
         "applying the hybrid span delta to the FROM snapshot must " +
           "reproduce the TO snapshot exactly (multiset semantics)")
 
-      // hybrid ≡ walk: rename _log away (the unlogged-table baseline) so
-      // every step classifies through the walk paths, and compare
-      val logDir = Paths.get(p, "_log")
-      val off = Paths.get(p, "_log_off")
-      Files.move(logDir, off)
-      try {
-        val walked = t.changesBetween(spark, fromV, target).collect().toSeq
-        assert(multiset(cdf.map(r => org.apache.spark.sql.Row.fromSeq(
-            r.toSeq))) == multiset(walked),
-          "hybrid resolution must equal the walk-based classification " +
-            "row-for-row (multiset)")
-      } finally Files.move(off, logDir)
+      // hybrid ≡ snapshot diff: the one-shot multiset delta of the two
+      // snapshots, row for row
+      val diff = (fromM.keySet ++ toM.keySet).toSeq.flatMap { k =>
+        val d = toM.getOrElse(k, 0L) - fromM.getOrElse(k, 0L)
+        Seq.fill(math.abs(d).toInt)(k :+ (if (d > 0) "insert" else "delete"))
+      }
+      assert(multiset(cdf) == diff.groupBy(identity).view
+          .mapValues(_.size.toLong).toMap,
+        "hybrid resolution must equal the snapshot diff row-for-row " +
+          "(multiset)")
     } finally {
       prevRetain match {
         case Some(v) => sys.props("graft.log.retainCommits") = v
