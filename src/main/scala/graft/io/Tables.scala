@@ -304,7 +304,8 @@ final class ParquetTable(val path: String,
     *      is the version live when staging began) and returns what the
     *      log record carries;
     *   2. under the commit lock: roll back a killed commit's residue
-    *      above the live version ([[rollBackAbove]]), the stale check
+    *      at live + 1 ([[rollBack]]; [[refuseLostPointer]] first when
+    *      there is no pointer), the stale check
     *      (when `expected` is set), then number the version n = live + 1,
     *      rename the staged dir to `v_n`, write its log record and swap
     *      the pointer — the commit point. The record precedes the
@@ -328,7 +329,8 @@ final class ParquetTable(val path: String,
         val staged = stage(dir, base)
         ParquetTable.withCommitLock(path) {
           val live = versionNum
-          rollBackAbove(live)
+          if (live == 0) refuseLostPointer()
+          rollBack(live + 1)
           checkStale(live)
           val next = f"v_${live + 1}%05d"
           Files.move(staging, Paths.get(path, next),
@@ -343,7 +345,7 @@ final class ParquetTable(val path: String,
             swapPointer(next)
           } catch {
             case t: Throwable =>
-              try rollBackAbove(live)
+              try rollBack(live + 1)
               catch { case e: Exception => t.addSuppressed(e) }
               throw t
           }
@@ -359,22 +361,37 @@ final class ParquetTable(val path: String,
     this
   }
 
-  /** Delete what a commit killed between its rename and its pointer swap
-    * left above the live version: the `v_k` dir and its log record and
-    * checkpoint. Numbers are dense, so the residue is contiguous from
-    * live + 1. Runs under the commit lock, where nothing above live is
-    * in flight.
+  /** Delete what a commit killed between its rename and its pointer
+    * swap left at version `n` = live + 1: the `v_n` dir and its log
+    * record. Commits are serialised under the commit lock and each one
+    * rolls back before it numbers its own version, so that is all the
+    * residue there can be; checkpoints are written after the swap, so
+    * none exists above live.
     */
-  private def rollBackAbove(live: Int): Unit = {
-    var k = live + 1
-    var found = true
-    while (found) {
-      val dir = Paths.get(path, f"v_$k%05d")
-      val hadDir = Files.exists(dir)
-      FsUtil.deleteRecursively(dir)
-      found = VersionLog.discard(path, k) || hadDir
-      k += 1
-    }
+  private def rollBack(n: Int): Unit = {
+    FsUtil.deleteRecursively(Paths.get(path, f"v_$n%05d"))
+    VersionLog.discard(path, n)
+  }
+
+  /** With no pointer, a killed first commit leaves at most `v_00001`
+    * and its record. Any later version dir, record or checkpoint means
+    * the pointer was lost, not that a first commit died: refuse, as
+    * [[vacuum]] does, rather than roll the history back. One listing of
+    * the table root and of its log, on a first commit only.
+    */
+  private def refuseLostPointer(): Unit = {
+    def names(p: java.nio.file.Path) =
+      FsUtil.listDir(p).map(_.getFileName.toString)
+    val later = names(Paths.get(path)).filter(n =>
+      n.startsWith("v_") && n != "v_00001") ++
+      names(Paths.get(path, "_log")).filter(n =>
+        n.startsWith("ckpt_") ||
+          (n.startsWith("r_") && !n.startsWith("r_00001.")))
+    require(later.isEmpty,
+      s"commit: no _current pointer at $path but later versions exist " +
+        s"(${later.sorted.take(3).mkString(", ")}) — refusing to roll " +
+        "back the history; restore the pointer (or remove the directory " +
+        "deliberately) first")
   }
 
   private def commitNew(df: DataFrame, expected: Option[Int],
@@ -1152,10 +1169,8 @@ final class ParquetTable(val path: String,
     * delete(old)+insert(new). NULL-safe throughout — grouping collates NULL
     * values, and the version join compares with `<=>`. Served from the
     * commit log when every step's record classifies it (a write-side
-    * feed or an append's added files: [[logSpanDelta]]), else with the
-    * log-covered suffix of a span behind the retention horizon
-    * ([[hybridSpanDelta]]), else by the full snapshot diff
-    * ([[multisetDiff]], two shuffles).
+    * feed or an append's added files: [[logSpanDelta]]), else by the
+    * full snapshot diff ([[multisetDiff]], two shuffles).
     */
   def changesBetween(spark: SparkSession, fromV: Int, toV: Int): DataFrame = {
     // align both sides on the TO version's schema (Delta's convention for
@@ -1171,7 +1186,6 @@ final class ParquetTable(val path: String,
       s"changesBetween: table columns may not use the reserved names " +
         s"__* or _change_type (got ${cols.mkString(", ")})")
     logSpanDelta(spark, fromV, toV, to, cols)
-      .orElse(hybridSpanDelta(spark, fromV, toV, to, cols))
       .getOrElse(multisetDiff(alignTo(readVersion(spark, fromV), to, cols),
         to, cols))
   }
@@ -1246,33 +1260,6 @@ final class ParquetTable(val path: String,
       .select(cols.map(col) :+
         when(col("__delta") > 0, lit("insert")).otherwise(lit("delete"))
           .as("_change_type"): _*)
-  }
-
-  /** Hybrid CDF resolution for spans straddling the log-retention
-    * horizon (a consumer more than `graft.log.retainCommits` behind):
-    * the retired records below `h` =
-    * [[VersionLog.resolvableSuffixStart]] make [[logSpanDelta]] refuse
-    * the WHOLE span, but the suffix (h, toV] is still fully log-served
-    * — so take the prefix (fromV, h] as the snapshot diff IN h's OWN
-    * schema, the suffix from the grouped log path, and NET the two
-    * delta frames ([[netSteps]] — exactly the semantics one diff of the
-    * whole span produces, since multiset deltas telescope). None when
-    * the span is entirely unresolvable or entirely resolvable, or when
-    * a snapshot the prefix needs was vacuumed.
-    */
-  private def hybridSpanDelta(spark: SparkSession, fromV: Int, toV: Int,
-      to: DataFrame, cols: Seq[String]): Option[DataFrame] = {
-    if (fromV >= toV) return None
-    val h = VersionLog.resolvableSuffixStart(path, fromV, toV)
-    if (h <= fromV || h >= toV) return None
-    logSpanDelta(spark, h, toV, to, cols).flatMap { sfx =>
-      val (fromDf, toH) =
-        try (readVersion(spark, fromV), readVersion(spark, h))
-        catch { case _: IllegalArgumentException => return None }
-      val hCols = toH.columns.toIndexedSeq
-      val pre = multisetDiff(alignTo(fromDf, toH, hCols), toH, hCols)
-      Some(netSteps(Seq(pre, sfx), to, cols))
-    }
   }
 
   /** CDF span resolution off the COMMIT LOG ([[VersionLog]]): every

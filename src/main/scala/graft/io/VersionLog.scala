@@ -364,12 +364,11 @@ private[graft] object VersionLog {
         retireCheckpoints(path, v)
       } catch { case _: Exception => () }
 
-  /** Roll back a crashed commit's log residue at version `v` (above the
-    * live one): its record and checkpoint. True when either existed.
+  /** Roll back a killed commit's record at version `v` = live + 1 (its
+    * checkpoint cannot exist: those are written after the swap).
     */
-  def discard(path: String, v: Int): Boolean =
-    Files.deleteIfExists(recordPath(path, v)) |
-      Files.deleteIfExists(ckptPath(path, v))
+  def discard(path: String, v: Int): Unit =
+    Files.deleteIfExists(recordPath(path, v))
 
   /** Version `v`'s record from its loose file or covering checkpoint;
     * None when it is missing, torn or retired.
@@ -594,22 +593,6 @@ private[graft] object VersionLog {
       try recordAt(path, v, ctx) catch { case _: Exception => None }
     }
   }
-
-  /** The smallest `h` in [fromV, toV] such that EVERY step in (h, toV]
-    * has a resolvable record — the hybrid-CDF split point: a span
-    * consumer further behind than the log-retention horizon serves the
-    * (h, toV] suffix from the grouped log path and pays the snapshot
-    * diff only for the retired (fromV, h] prefix. `toV` (an empty suffix)
-    * when nothing above `fromV` resolves; `fromV` when everything does.
-    * One `_log` listing, memoized checkpoint parses.
-    */
-  def resolvableSuffixStart(path: String, fromV: Int, toV: Int): Int =
-    try {
-      val ctx = new LogCtx(path)
-      var h = toV
-      while (h > fromV && recordAt(path, h, ctx).isDefined) h -= 1
-      h
-    } catch { case _: Exception => toV }
 
   /** Records for every step in (fromV, toV], resolved through
     * checkpoints first (each covers its (prev, ckpt] interval in ONE

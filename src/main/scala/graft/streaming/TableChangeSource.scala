@@ -46,8 +46,9 @@ import graft.io.ParquetTable
   * **Rate limiting.** `maxVersionsPerTrigger` caps how many versions
   * one micro-batch may cover (the initial snapshot always counts as
   * one trigger). Each span still resolves through the commit log's
-  * grouped feed/append scans (O(changes), hybrid across the
-  * retention horizon) — never a per-version loop of jobs.
+  * grouped feed/append scans (O(changes); a span behind the
+  * retention horizon takes the snapshot diff) — never a per-version
+  * loop of jobs.
   *
   * Scale: per trigger this is O(changes in span) — the same cost the
   * batch IVM consumers pay, now with the engine driving cadence. At

@@ -205,6 +205,30 @@ class CommitProtocolSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a lost pointer is not a crashed first commit: commits refuse " +
+      "and the history is kept") {
+    val dir = Files.createTempDirectory("graft_lost_ptr").toString
+    val src = base(s"$dir/src")
+    val t = base(s"$dir/t")
+    t.appendVersion(df((4L, "a", 40L)))
+    val records = (1 to 3).map(v => Paths.get(t.path, "_log", f"r_$v%05d.txt"))
+    Files.delete(Paths.get(t.path, "_current"))
+    val attempts: Seq[(String, () => Unit)] = Seq(
+      "overwrite" -> (() => t.overwrite(df((5L, "c", 50L)))),
+      "overwriteIf" -> (() => t.overwriteIf(df((5L, "c", 50L)), 0)),
+      "cloneTo" -> (() => src.cloneTo(t.path)))
+    attempts.foreach { case (kind, attempt) =>
+      withClue(kind) {
+        val e = intercept[IllegalArgumentException](attempt())
+        assert(e.getMessage.contains(t.path))
+        assert(LogOracle.versionDirs(t) ==
+          Seq("v_00001", "v_00002", "v_00003"))
+        assert(records.forall(Files.exists(_)))
+        assert(LogOracle.stageDirs(t).isEmpty)
+      }
+    }
+  }
 }
 
 /** The race spec's rendezvous: the slow writer's UDF runs in this JVM's

@@ -242,8 +242,8 @@ class VersionLogSpec extends AnyFunSuite {
       // retired interval reads the version dir
       assert(t.readVersion(spark, 10).collect().map(_.getLong(0)).toSet ==
         (1L to 10L).toSet)
-      // CDF entirely within (the snapshot diff) and across (the hybrid)
-      // the retired interval
+      // CDF entirely within and across the retired interval (both the
+      // snapshot diff)
       val inRet = t.changesBetween(spark, 2, 12)
       assert(inRet.count() == 10L && inRet.filter(
         org.apache.spark.sql.functions.col("_change_type") =!= "insert")
@@ -274,9 +274,9 @@ class VersionLogSpec extends AnyFunSuite {
     }
   }
 
-  test("hybrid CDF across the retirement horizon: the log-covered " +
-      "suffix is served from records, only the retired prefix diffs " +
-      "snapshots — hybrid ≡ snapshot diff on a mixed feed/append span") {
+  test("CDF across the retirement horizon: a span the log cannot " +
+      "resolve takes the snapshot diff — patch law and ≡ snapshot diff " +
+      "on a mixed feed/append span") {
     import org.apache.spark.sql.functions.col
     val prevRetain = sys.props.get("graft.log.retainCommits")
     try {
@@ -293,18 +293,11 @@ class VersionLogSpec extends AnyFunSuite {
         else t.appendVersion(Seq((1000L + i, i.toLong)).toDF("id", "v"))
       }
       val fromV = 3
-      // the hybrid split point must fall strictly INSIDE the span:
-      // steps ≤ 16 are retired (ckpt 16 gone, records compacted), the
-      // suffix (16, 48] is fully log-served
-      val h = VersionLog.resolvableSuffixStart(p, fromV, target)
-      assert(h == 2 * VersionLog.CheckpointEvery ||
-        (h > fromV && h < target),
-        s"split point $h must be inside ($fromV, $target)")
+      // steps ≤ 16 are retired (ckpt 16 gone, records compacted), so
+      // the span falls back to the snapshot diff
       assert(VersionLog.resolveSteps(p, fromV, target).isEmpty,
-        "the full span must NOT log-resolve (else the hybrid path is " +
-          "not what this test exercises)")
-      assert(VersionLog.resolveSteps(p, h, target).nonEmpty,
-        "the suffix must be fully log-served")
+        "the full span must NOT log-resolve (else the fallback is not " +
+          "what this test exercises)")
 
       def multiset(rows: Seq[org.apache.spark.sql.Row]): Map[Seq[Any], Long] =
         rows.map(_.toSeq).groupBy(identity).view.mapValues(_.size.toLong)
@@ -326,10 +319,10 @@ class VersionLogSpec extends AnyFunSuite {
         if (n == 0L) m - key else m.updated(key, n)
       }
       assert(patched == toM,
-        "applying the hybrid span delta to the FROM snapshot must " +
+        "applying the span delta to the FROM snapshot must " +
           "reproduce the TO snapshot exactly (multiset semantics)")
 
-      // hybrid ≡ snapshot diff: the one-shot multiset delta of the two
+      // ≡ snapshot diff: the one-shot multiset delta of the two
       // snapshots, row for row
       val diff = (fromM.keySet ++ toM.keySet).toSeq.flatMap { k =>
         val d = toM.getOrElse(k, 0L) - fromM.getOrElse(k, 0L)
@@ -337,7 +330,7 @@ class VersionLogSpec extends AnyFunSuite {
       }
       assert(multiset(cdf) == diff.groupBy(identity).view
           .mapValues(_.size.toLong).toMap,
-        "hybrid resolution must equal the snapshot diff row-for-row " +
+        "span resolution must equal the snapshot diff row-for-row " +
           "(multiset)")
     } finally {
       prevRetain match {
